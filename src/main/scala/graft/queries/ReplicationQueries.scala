@@ -250,6 +250,7 @@ object ReplicationQueries {
         MergeSink.flushPartitioned(s,
           updateOrders(s, d).withColumn("_seq", lit(2L)),
           tablePath, Seq("o_orderkey"), "_seq", numParts = 16)
+        s.read.parquet(tablePath)
           .select(col("o_orderkey"), col("o_custkey"),
             col("o_orderstatus"), col("o_totalprice"))
       },

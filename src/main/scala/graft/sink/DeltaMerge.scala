@@ -6,8 +6,8 @@ import org.apache.spark.sql.functions._
 /** Merge-on-read flush path — the steady-state answer to "a 100k-row CDC
   * batch against a 100 TB target, every few seconds".
   *
-  * Measurement first (MergeBench, sf0.1): a batch whose keys hash across
-  * all buckets touches EVERY partition of a PK-hash layout, so
+  * Measurement first (docs/MERGE_SCALING.md, sf0.1): a batch whose keys
+  * hash across all buckets touches EVERY partition of a PK-hash layout, so
   * [[MergeSink.flushPartitioned]] degenerates to a full rewrite (plus
   * per-partition swap overhead) unless batch keys cluster. Partitioned
   * rewrite is right for clustered/ranged updates and for compaction;
@@ -30,16 +30,14 @@ import org.apache.spark.sql.functions._
   *
   * Layout: `tablePath/base/` (parquet) + `tablePath/delta/d-<uuid>.parquet`.
   * Crash safety: a delta directory write is staged then renamed (readers
-  * only ever see whole files); compaction publishes the new base via the
-  * same retire-then-promote swap as [[MergeSink.publish]] and only then
-  * clears consumed deltas — a replayed delta is idempotent because the
+  * only ever see whole files); the base is published through
+  * [[DirCommit]] (bootstrap and compaction alike), which every flush
+  * recovers first, and compaction clears consumed deltas only after the
+  * new base is in place — a replayed delta is idempotent because the
   * merge is last-write-wins on `orderCol`.
   */
 object DeltaMerge {
 
-  private def fs(spark: SparkSession) =
-    org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
   private def path(s: String) = new org.apache.hadoop.fs.Path(s)
 
   def basePath(tablePath: String): String = s"$tablePath/base"
@@ -53,7 +51,8 @@ object DeltaMerge {
                  hardDelete: Boolean = false): Unit = {
     require(pks.nonEmpty, "flushDelta requires primary keys")
     val deduped = MergeSink.dedupLastWins(batch, pks, orderCol)
-    val f = fs(spark)
+    val f = DirCommit.fs(spark, tablePath)
+    DirCommit.recover(basePath(tablePath))
     if (!f.exists(path(basePath(tablePath)))) {
       // bootstrap: first flush becomes the base — staged + swapped via
       // publish (same retire-then-promote as every later compaction), so
@@ -68,7 +67,7 @@ object DeltaMerge {
       val stage = s"$tablePath/.stage-$name"
       deduped.write.mode(SaveMode.Overwrite).parquet(stage)
       f.mkdirs(path(deltaPath(tablePath)))
-      f.rename(path(stage), path(s"${deltaPath(tablePath)}/$name"))
+      DirCommit.move(f, path(stage), path(s"${deltaPath(tablePath)}/$name"))
     }
   }
 
@@ -78,7 +77,7 @@ object DeltaMerge {
   private def deltaWinners(spark: SparkSession, tablePath: String,
                            pks: Seq[String], orderCol: String)
       : Option[DataFrame] = {
-    val f = fs(spark)
+    val f = DirCommit.fs(spark, tablePath)
     val dp = path(deltaPath(tablePath))
     if (!f.exists(dp) || f.listStatus(dp).isEmpty) None
     else Some(MergeSink.dedupLastWins(
@@ -119,7 +118,8 @@ object DeltaMerge {
 
   def compact(spark: SparkSession, tablePath: String, pks: Seq[String],
               orderCol: String, hardDelete: Boolean = false): Unit = {
-    val f = fs(spark)
+    DirCommit.recover(basePath(tablePath))
+    val f = DirCommit.fs(spark, tablePath)
     val dp = path(deltaPath(tablePath))
     if (!f.exists(dp)) return
     val consumed = f.listStatus(dp).map(_.getPath).toSeq
@@ -161,7 +161,7 @@ object DeltaMerge {
                 compactMinDeltaBytes: Long = DefaultCompactMinDeltaBytes)
       : Unit = {
     flushDelta(spark, batch, tablePath, pks, orderCol, hardDelete)
-    val f = fs(spark)
+    val f = DirCommit.fs(spark, tablePath)
     def bytes(p: String): Long =
       if (f.exists(path(p))) f.getContentSummary(path(p)).getLength else 0L
     val b = bytes(basePath(tablePath))

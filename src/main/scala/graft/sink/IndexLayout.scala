@@ -58,9 +58,6 @@ object IndexLayout {
     JsonMethods.compact(JsonMethods.render(obj))
   }
 
-  def fs(spark: SparkSession, path: String): FileSystem =
-    new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-
   /** Atomic-enough meta promotion: write `.next`, delete the primary,
     * rename. [[recoverMeta]] heals the delete/rename window at the
     * next writer entry; readers fall back to `.next` inside it
@@ -179,6 +176,11 @@ object IndexLayout {
   /** Highest epoch applied to the layout (-1: batch-published). */
   def lastEpoch(root: JValue): Long = optLong(root, "last_epoch", -1L)
 
+  /** The epoch committed with the layout's meta, if it has one. */
+  def lastApplied(spark: SparkSession, path: String): Option[Long] =
+    if (!DirCommit.fs(spark, path).exists(new Path(path, MetaFile))) None
+    else Some(lastEpoch(graft.operators.Dedup.readIndexMeta(spark, path)))
+
   /** The postings view of a layout: the manifest-pruned base shards
     * (or the full base when `points` is None — the over-cap fallback)
     * UNION the uncompacted epoch appends. `maxEpochExclusive` serves
@@ -208,7 +210,7 @@ object IndexLayout {
     // enumerate the tail partitions on the FILESYSTEM: an empty (or
     // absent) epochs dir must not break parquet schema inference, and
     // only the needed partitions should be listed into the scan
-    val f = fs(spark, path)
+    val f = DirCommit.fs(spark, path)
     val epochsPath = new Path(epochsDir)
     val tail =
       if (lastEpoch(root) < 0 || !f.exists(epochsPath)) Seq.empty[Long]
@@ -246,7 +248,7 @@ object IndexLayout {
   def appendEpoch(postings: DataFrame, path: String, epoch: Long,
                   table: MaintainedTable = Postings): Boolean = {
     val spark = postings.sparkSession
-    val f = fs(spark, path)
+    val f = DirCommit.fs(spark, path)
     val dst = new Path(s"$path/${table.epochsSub}/epoch=$epoch")
     if (f.exists(dst)) return false
     val stage = s"$path/.stage_${table.name}_epoch_$epoch"
@@ -277,7 +279,7 @@ object IndexLayout {
     val merged = readPostings(spark, path, root, points = None,
       maxEpochExclusive = Some(upTo + 1), table)
     Sinks.writeRangeSorted(merged, s"$path/$newDir", sortCol, shards)
-    promoteMeta(fs(spark, path), path, metaJson(metaFields ++ Seq(
+    promoteMeta(DirCommit.fs(spark, path), path, metaJson(metaFields ++ Seq(
       table.dirField -> newDir, table.throughField -> upTo)))
     healOrphans(spark, path, keepDir = newDir,
       clearEpochsThrough = upTo, table)
@@ -300,7 +302,7 @@ object IndexLayout {
                   clearEpochsThrough: Long,
                   table: MaintainedTable = Postings,
                   retain: Set[String] = Set.empty): Unit = {
-    val f = fs(spark, path)
+    val f = DirCommit.fs(spark, path)
     val rootPath = new Path(path)
     val generated = (table.name + "_v\\d+").r
     if (f.exists(rootPath))

@@ -1,5 +1,6 @@
 package graft.sink
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -18,6 +19,13 @@ import graft.catalog.SchemaDiff
   *    (db_sync.py:767-860)
   *  - atomic publish via staged write + swap
   *    (fastsync/commons/target_snowflake.py:448-469)
+  *
+  * Crash safety: every write goes through the one directory commit,
+  * [[DirCommit]] (stage, retire to `<table>.old`, promote, drop), and
+  * every flush first runs [[DirCommit.recover]], so a flush after a kill
+  * inside a swap finishes or rolls back that swap before it decides
+  * whether a target exists. A re-run of the same batch converges to the
+  * no-crash table: the merge is last-write-wins on `orderCol`.
   *
   * All merge logic is a declarative plan (window dedup + join + coalesce)
   * so Catalyst is free to broadcast the small side, and AQE handles skew.
@@ -98,57 +106,26 @@ object MergeSink {
   def append(target: DataFrame, updates: DataFrame): DataFrame =
     target.unionByName(updates, allowMissingColumns = true)
 
-  /** Atomic publish: write to a staged dir, then swap into place — the
-    * Spark-side `ALTER TABLE ... SWAP WITH` (target_snowflake.py:448-469).
-    * Readers either see the old table or the new one, never a partial
-    * write.
+  /** Atomic publish: write to a staged dir, then swap into place through
+    * [[DirCommit]]. Readers either see the old table or the new one,
+    * never a partial write.
     */
-  def publish(df: DataFrame, tablePath: String): Unit = {
-    val stage = tablePath + ".stage"
-    df.write.mode(SaveMode.Overwrite).parquet(stage)
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      df.sparkSession.sparkContext.hadoopConfiguration)
-    atomicSwapDir(fs, stage, tablePath, tablePath + ".old")
-  }
+  def publish(df: DataFrame, tablePath: String): Unit =
+    DirCommit.commit(tablePath)(df.write.mode(SaveMode.Overwrite).parquet(_))
 
-  /** Rename-based swap: retire `dstPath` to `oldPath`, promote `stagePath`,
-    * drop the retired copy. Old data is never deleted before the
-    * replacement is in place, so a crash at any point leaves either the
-    * old table, the new table, or a recoverable `.old` copy.
-    */
-  private[graft] def atomicSwapDir(fs: org.apache.hadoop.fs.FileSystem,
-                                  stagePath: String, dstPath: String,
-                                  oldPath: String): Unit = {
-    val dst = new org.apache.hadoop.fs.Path(dstPath)
-    val old = new org.apache.hadoop.fs.Path(oldPath)
-    // Hadoop FileSystems signal rename failure by RETURNING FALSE, not
-    // throwing — ignoring it here would fall through to the delete and
-    // destroy the only remaining copy of the table
-    if (fs.exists(old)) fs.delete(old, true)
-    if (fs.exists(dst) && !fs.rename(dst, old))
-      throw new java.io.IOException(
-        s"swap: could not retire $dstPath to $oldPath")
-    if (!fs.rename(new org.apache.hadoop.fs.Path(stagePath), dst))
-      throw new java.io.IOException(
-        s"swap: could not promote $stagePath to $dstPath" +
-          s" (previous table preserved at $oldPath)")
-    fs.delete(old, true)
-  }
-
-  /** Full merge-flush of one batch into a parquet table dir: dedup,
-    * evolve schema, merge, publish. Returns the merged frame.
+  /** Full merge-flush of one batch into a parquet table dir: recover an
+    * interrupted commit, dedup, evolve schema, merge, publish.
     */
   def flush(spark: SparkSession, batch: DataFrame, tablePath: String,
             pks: Seq[String], orderCol: String,
             hardDelete: Boolean = false,
-            versionSuffix: String = "v"): DataFrame = {
+            versionSuffix: String = "v"): Unit = {
+    DirCommit.recover(tablePath)
     val deduped =
       if (pks.nonEmpty) dedupLastWins(batch, pks, orderCol) else batch
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    val exists = fs.exists(new org.apache.hadoop.fs.Path(tablePath))
     val merged =
-      if (!exists) dropTombstones(deduped, hardDelete)
+      if (!DirCommit.fs(spark, tablePath).exists(new Path(tablePath)))
+        dropTombstones(deduped, hardDelete)
       else {
         val target = spark.read.parquet(tablePath)
         val evolved = evolveTarget(target, deduped.schema, versionSuffix)
@@ -156,9 +133,6 @@ object MergeSink {
         else append(evolved, deduped)
       }
     publish(merged, tablePath)
-    // re-read: the publish swap retired the files the lazy `merged` plan
-    // references, so returning it would break on re-evaluation
-    spark.read.parquet(tablePath)
   }
 
   // ---- partitioned incremental merge ----------------------------------
@@ -196,29 +170,27 @@ object MergeSink {
   def flushPartitioned(spark: SparkSession, batch: DataFrame,
                        tablePath: String, pks: Seq[String], orderCol: String,
                        numParts: Int = 64, hardDelete: Boolean = false,
-                       versionSuffix: String = "v"): DataFrame = {
+                       versionSuffix: String = "v"): Unit = {
     require(pks.nonEmpty, "flushPartitioned requires primary keys")
     require(!batch.columns.contains(PartCol),
       s"$PartCol is reserved for the partitioned layout")
+    DirCommit.recover(tablePath)
     val deduped = dedupLastWins(batch, pks, orderCol)
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    val stage = tablePath + ".stage"
 
-    def writeStagePartitioned(df: DataFrame): Unit =
+    // co-locate each bucket into one task before partitionBy: otherwise
+    // EVERY task writes a file into EVERY touched bucket (tasks × buckets
+    // small files — measured 14× slower locally and a small-file
+    // explosion at scale)
+    def writeStage(df: DataFrame, tasks: Int)(stage: String): Unit =
       df.withColumn(PartCol, pkBucket(pks, numParts))
-        // co-locate each bucket into one task before partitionBy:
-        // otherwise EVERY task writes a file into EVERY touched bucket
-        // (tasks × buckets small files — measured 14× slower locally and
-        // a small-file explosion at scale)
-        .repartition(numParts, col(PartCol))
+        .repartition(tasks, col(PartCol))
         .write.partitionBy(PartCol).mode(SaveMode.Overwrite).parquet(stage)
+    def commitWhole(df: DataFrame): Unit =
+      DirCommit.commit(tablePath)(writeStage(df, numParts))
 
-    val exists = fs.exists(new org.apache.hadoop.fs.Path(tablePath))
-    if (!exists) {
-      writeStagePartitioned(dropTombstones(deduped, hardDelete))
-      atomicSwapDir(fs, stage, tablePath, tablePath + ".old")
-    } else {
+    if (!DirCommit.fs(spark, tablePath).exists(new Path(tablePath)))
+      commitWhole(dropTombstones(deduped, hardDelete))
+    else {
       val target = spark.read.parquet(tablePath)
       // migration path: an existing UNpartitioned table (written by
       // publish/flush) is rewritten once into the partitioned layout
@@ -230,8 +202,7 @@ object MergeSink {
         // evolution rewrites every partition (all rows change schema)
         val evolved =
           evolveTarget(target.drop(PartCol), deduped.schema, versionSuffix)
-        writeStagePartitioned(merge(evolved, deduped, pks, hardDelete))
-        atomicSwapDir(fs, stage, tablePath, tablePath + ".old")
+        commitWhole(merge(evolved, deduped, pks, hardDelete))
       } else {
         // two actions consume the deduped batch (touched-bucket pruning,
         // then the merge write) — persist so the scan + dedup window
@@ -245,32 +216,24 @@ object MergeSink {
             .select(pkBucket(pks, numParts).as(PartCol)).distinct()
             .collect().map(_.getInt(0)).sorted
           if (touched.length >= numParts * 3 / 4) {
-            // degenerate case (measured in MergeBench): a batch whose
-            // keys hash across (nearly) every bucket rewrites everything
+            // degenerate case (docs/MERGE_SCALING.md): a batch whose keys
+            // hash across (nearly) every bucket rewrites everything
             // anyway — one whole-layout write + ONE swap beats numParts
-            // per-partition swaps. High-frequency random-key batches
-            // belong on DeltaMerge, not here.
-            writeStagePartitioned(
-              merge(target.drop(PartCol), d, pks, hardDelete))
-            atomicSwapDir(fs, stage, tablePath, tablePath + ".old")
-          } else {
+            // per-bucket swaps. High-frequency random-key batches belong
+            // on DeltaMerge, not here.
+            commitWhole(merge(target.drop(PartCol), d, pks, hardDelete))
+          } else if (touched.nonEmpty) {
             val slice = target
               .filter(col(PartCol).isin(touched.toSeq: _*)).drop(PartCol)
-            writeStagePartitioned(merge(slice, d, pks, hardDelete))
-            touched.foreach { b =>
-              val stDir = s"$stage/$PartCol=$b"
-              val dstDir = s"$tablePath/$PartCol=$b"
-              if (fs.exists(new org.apache.hadoop.fs.Path(stDir)))
-                atomicSwapDir(fs, stDir, dstDir, s"$tablePath.old.$b")
-              else // hard delete emptied the bucket
-                fs.delete(new org.apache.hadoop.fs.Path(dstDir), true)
-            }
-            fs.delete(new org.apache.hadoop.fs.Path(stage), true)
+            // one task per touched bucket, not numParts mostly-empty ones;
+            // a bucket missing from the stage (hard delete emptied it)
+            // ends empty
+            DirCommit.commitParts(tablePath, touched.map(b => s"$PartCol=$b"))(
+              writeStage(merge(slice, d, pks, hardDelete), touched.length))
           }
         } finally d.unpersist()
       }
     }
-    spark.read.parquet(tablePath).drop(PartCol)
   }
 
   /** Bucketed publish: persist the target as a bucketed table on its PKs

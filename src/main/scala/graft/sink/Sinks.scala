@@ -38,9 +38,9 @@ object Sinks {
     * incremental merges accrete files far below the ~128 MB scan-optimal
     * size, and scan cost degrades with per-file open/footer overhead
     * (plus driver-side listing). Rewrites `dir` into
-    * `ceil(rows / targetRecordsPerFile)` files via a staged write and the
-    * same atomic rename-swap [[graft.sink.MergeSink.publish]] uses —
-    * readers never observe a partial layout. Returns
+    * `ceil(rows / targetRecordsPerFile)` files through [[DirCommit]], the
+    * commit [[graft.sink.MergeSink.publish]] uses — readers never observe
+    * a partial layout. Returns
     * `(filesBefore, filesAfter)`.
     *
     * Scale notes: `repartition(n)` is a full shuffle of the data being
@@ -53,10 +53,7 @@ object Sinks {
   def compactFiles(spark: org.apache.spark.sql.SparkSession, dir: String,
                    targetRecordsPerFile: Long): (Int, Int) = {
     require(targetRecordsPerFile > 0, "targetRecordsPerFile must be > 0")
-    // derive the FS from the path, not the default FS: dir may live on a
-    // non-default scheme (s3a:// with an HDFS default, file:// in tests)
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = DirCommit.fs(spark, dir)
     def dataFiles(p: String): Int = {
       val entries = fs.listStatus(new org.apache.hadoop.fs.Path(p))
       // flat-layout pass only: partitioned layouts (subdirectories) must be
@@ -68,15 +65,13 @@ object Sinks {
           "compact each partition directory individually")
       entries.count(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
     }
+    DirCommit.recover(dir)
     val before = dataFiles(dir)
     val df = spark.read.parquet(dir)
     val rows = df.count()
     val n = math.max(1, math.ceil(rows.toDouble / targetRecordsPerFile).toInt)
-    val staged = s"$dir.__compacting"
-    df.repartition(n).write.mode(SaveMode.Overwrite).parquet(staged)
-    // the publish() rename dance: old data is never deleted before the
-    // replacement is in place
-    MergeSink.atomicSwapDir(fs, staged, dir, s"$dir.__retired")
+    DirCommit.commit(dir)(df.repartition(n).write.mode(SaveMode.Overwrite)
+      .parquet(_))
     (before, dataFiles(dir))
   }
 

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
 
-import graft.sink.MergeSink
+import graft.sink.DirCommit
 
 /** Continuous metric-anomaly monitoring — the streaming twin of the
   * `metric_anomalies` query: per-key running moments `(n, Σv, Σv²)` are
@@ -32,8 +32,6 @@ import graft.sink.MergeSink
   */
 object StreamingAnomalies {
 
-  private val Marker = "_applied_batch"
-
   def start(spark: SparkSession, sourceDir: String, schema: StructType,
             statePath: String, alertsPath: String, checkpoint: String,
             keyCol: String, valueCol: String, idCol: String, z: Int = 3,
@@ -53,12 +51,9 @@ object StreamingAnomalies {
       statePath: String, alertsPath: String, keyCol: String,
       valueCol: String, idCol: String, z: Int): Unit = {
     val spark = batch.sparkSession
-    val fs = new Path(statePath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new Path(statePath)) &&
-        fs.exists(new Path(statePath + ".old")))
-      fs.rename(new Path(statePath + ".old"), new Path(statePath))
-    if (lastApplied(spark, statePath).exists(_ >= batchId)) return
+    val fs = DirCommit.fs(spark, statePath)
+    DirCommit.recover(statePath)
+    if (DirCommit.lastApplied(statePath).exists(_ >= batchId)) return
 
     val e = batch.select(col(idCol), col(keyCol),
       floor(col(valueCol) * 100 + lit(0.5)).cast("long").as("__v"))
@@ -99,26 +94,10 @@ object StreamingAnomalies {
             .agg(sum(col("n")).as("n"), sum(col("s")).as("s"),
               sum(col("s2")).as("s2"))
         else batchStats
-      val stage = statePath + ".stage"
-      merged.coalesce(1)
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(stage)
-      val out = fs.create(new Path(stage, Marker), true)
-      try out.write(batchId.toString.getBytes("UTF-8")) finally out.close()
-      MergeSink.atomicSwapDir(fs, stage, statePath, statePath + ".old")
+      DirCommit.commit(statePath, Some(batchId)) { stage =>
+        merged.coalesce(1)
+          .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(stage)
+      }
     } finally e.unpersist()
-  }
-
-  private[streaming] def lastApplied(spark: SparkSession,
-      statePath: String): Option[Long] = {
-    val fs = new Path(statePath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val p = new Path(statePath, Marker)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-        .toLongOption
-      finally in.close()
-    }
   }
 }

@@ -7,7 +7,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
 
 import graft.operators.Dedup
-import graft.sink.IndexLayout
+import graft.sink.{DirCommit, IndexLayout}
 
 /** Continuously maintained BANDED embedding index — the hyperplane-LSH
   * twin of [[StreamingBandedSignatureIndex]], and the proof the
@@ -60,7 +60,7 @@ object StreamingBandedEmbeddingIndex {
       compactEvery: Int, threshold: Double): Unit = {
     require(compactEvery >= 1, "compactEvery must be >= 1")
     val spark = batch.sparkSession
-    val f = IndexLayout.fs(spark, indexPath)
+    val f = DirCommit.fs(spark, indexPath)
     IndexLayout.recoverMeta(f, indexPath)
     val metaPath = new Path(indexPath, IndexLayout.MetaFile)
 
@@ -177,14 +177,5 @@ object StreamingBandedEmbeddingIndex {
             IndexLayout.compactedThrough(root3)),
         IndexLayout.Vectors)
     }
-  }
-
-  /** The epoch committed with the current sidecar, if any. */
-  private[graft] def lastApplied(spark: SparkSession,
-      indexPath: String): Option[Long] = {
-    val f = IndexLayout.fs(spark, indexPath)
-    if (!f.exists(new Path(indexPath, IndexLayout.MetaFile))) None
-    else Some(IndexLayout.lastEpoch(
-      Dedup.readIndexMeta(spark, indexPath)))
   }
 }

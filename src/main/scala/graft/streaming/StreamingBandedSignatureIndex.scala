@@ -6,7 +6,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
 
 import graft.operators.Dedup
-import graft.sink.IndexLayout
+import graft.sink.{DirCommit, IndexLayout}
 
 /** Continuously maintained BANDED-POSTINGS minhash index — the
   * streaming maintainer for the probe-optimized layout
@@ -77,7 +77,7 @@ object StreamingBandedSignatureIndex {
       shards: Int, compactEvery: Int, threshold: Double): Unit = {
     require(compactEvery >= 1, "compactEvery must be >= 1")
     val spark = batch.sparkSession
-    val f = IndexLayout.fs(spark, indexPath)
+    val f = DirCommit.fs(spark, indexPath)
     IndexLayout.recoverMeta(f, indexPath)
     val metaPath = new Path(indexPath, IndexLayout.MetaFile)
 
@@ -147,14 +147,5 @@ object StreamingBandedSignatureIndex {
       IndexLayout.compact(spark, indexPath, newRoot, "bh", shards,
         upTo = batchId, metaFields = paramFields(batchId))
     }
-  }
-
-  /** The epoch committed with the current sidecar, if any. */
-  private[graft] def lastApplied(spark: SparkSession,
-      indexPath: String): Option[Long] = {
-    val f = IndexLayout.fs(spark, indexPath)
-    if (!f.exists(new Path(indexPath, IndexLayout.MetaFile))) None
-    else Some(IndexLayout.lastEpoch(
-      Dedup.readIndexMeta(spark, indexPath)))
   }
 }

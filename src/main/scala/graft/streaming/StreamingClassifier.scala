@@ -7,7 +7,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
 
 import graft.operators.TextAnalysis
-import graft.sink.MergeSink
+import graft.sink.DirCommit
 
 /** Continuously retrained quality classifier — the streaming twin of
   * [[graft.operators.TextAnalysis.nbTrainHashed]]: per-bucket
@@ -27,8 +27,6 @@ import graft.sink.MergeSink
   * groupBy(bucket) — the merge with the stored table touches dim rows.
   */
 object StreamingClassifier {
-
-  private val Marker = "_applied_batch"
 
   def start(spark: SparkSession, sourceDir: String, schema: StructType,
             statePath: String, checkpoint: String,
@@ -50,12 +48,9 @@ object StreamingClassifier {
       statePath: String, labelExpr: String, textCol: String, dim: Int,
       scale: Long): Unit = {
     val spark = batch.sparkSession
-    val fs = new Path(statePath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new Path(statePath)) &&
-        fs.exists(new Path(statePath + ".old")))
-      fs.rename(new Path(statePath + ".old"), new Path(statePath))
-    if (lastApplied(spark, statePath).exists(_ >= batchId)) return
+    val fs = DirCommit.fs(spark, statePath)
+    DirCommit.recover(statePath)
+    if (DirCommit.lastApplied(statePath).exists(_ >= batchId)) return
 
     val batchCounts = TextAnalysis.nbTrainHashed(batch, expr(labelExpr),
       textCol, dim, scale).select("bucket", "pos_n", "neg_n")
@@ -68,25 +63,9 @@ object StreamingClassifier {
           .agg(sum(col("pos_n")).as("pos_n"), sum(col("neg_n")).as("neg_n"))
       else batchCounts
     val next = TextAnalysis.withNbWeight(merged, scale)
-    val stage = statePath + ".stage"
-    next.coalesce(1)
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(stage)
-    val out = fs.create(new Path(stage, Marker), true)
-    try out.write(batchId.toString.getBytes("UTF-8")) finally out.close()
-    MergeSink.atomicSwapDir(fs, stage, statePath, statePath + ".old")
-  }
-
-  private[streaming] def lastApplied(spark: SparkSession,
-      statePath: String): Option[Long] = {
-    val fs = new Path(statePath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val p = new Path(statePath, Marker)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-        .toLongOption
-      finally in.close()
+    DirCommit.commit(statePath, Some(batchId)) { stage =>
+      next.coalesce(1)
+        .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(stage)
     }
   }
 }

@@ -7,7 +7,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 import graft.operators.Dedup
-import graft.sink.MergeSink
+import graft.sink.DirCommit
 
 /** Continuously maintained near-dup components — the loop-closer after
   * [[StreamingNearDup]]: pair batches (from the streaming LSH detector,
@@ -30,8 +30,6 @@ import graft.sink.MergeSink
   */
 object StreamingComponents {
 
-  private val Marker = "_applied_batch"
-
   val stateSchema: StructType = StructType(Seq(
     StructField("id", LongType, nullable = false),
     StructField("component_id", LongType, nullable = false)))
@@ -53,12 +51,9 @@ object StreamingComponents {
   private[graft] def applyBatch(batch: DataFrame, batchId: Long,
       statePath: String, aCol: String, bCol: String): Unit = {
     val spark = batch.sparkSession
-    val fs = new Path(statePath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new Path(statePath)) &&
-        fs.exists(new Path(statePath + ".old")))
-      fs.rename(new Path(statePath + ".old"), new Path(statePath))
-    if (lastApplied(spark, statePath).exists(_ >= batchId)) return
+    val fs = DirCommit.fs(spark, statePath)
+    DirCommit.recover(statePath)
+    if (DirCommit.lastApplied(statePath).exists(_ >= batchId)) return
 
     val labels =
       if (fs.exists(new Path(statePath)))
@@ -68,24 +63,8 @@ object StreamingComponents {
           spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
           stateSchema)
     val next = Dedup.mergeComponents(labels, batch, aCol, bCol)
-    val stage = statePath + ".stage"
-    next.write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(stage)
-    val out = fs.create(new Path(stage, Marker), true)
-    try out.write(batchId.toString.getBytes("UTF-8")) finally out.close()
-    MergeSink.atomicSwapDir(fs, stage, statePath, statePath + ".old")
-  }
-
-  private[streaming] def lastApplied(spark: SparkSession,
-      statePath: String): Option[Long] = {
-    val fs = new Path(statePath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val p = new Path(statePath, Marker)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-        .toLongOption
-      finally in.close()
+    DirCommit.commit(statePath, Some(batchId)) { stage =>
+      next.write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(stage)
     }
   }
 }

@@ -7,7 +7,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
 
 import graft.operators.{Dedup, Similarity}
-import graft.sink.{IndexLayout, Sinks}
+import graft.sink.{DirCommit, IndexLayout, Sinks}
 
 /** Continuously maintained hierarchical-SemDeDup index — the streaming
   * twin of [[graft.operators.Similarity.buildHierarchyIndexAuto]] +
@@ -176,7 +176,7 @@ object StreamingHierarchyIndex {
     require(compactEvery >= 1, "compactEvery must be >= 1")
     require(maxClusters >= 1, "maxClusters must be >= 1")
     val spark = batch.sparkSession
-    val f = IndexLayout.fs(spark, indexPath)
+    val f = DirCommit.fs(spark, indexPath)
     IndexLayout.recoverMeta(f, indexPath)
     val metaPath = new Path(indexPath, IndexLayout.MetaFile)
 
@@ -307,7 +307,7 @@ object StreamingHierarchyIndex {
     val drifted = baselineOpt.exists(b => current - b > driftThreshold)
     if (!drifted) return Some(Some(baselineOpt.getOrElse(current)))
 
-    val f = IndexLayout.fs(spark, indexPath)
+    val f = DirCommit.fs(spark, indexPath)
     // the rebuild's corpus STREAMS from the published layout itself —
     // base shards + the uncompacted epoch tail, all parquet already on
     // disk. Each pass of the streamed build re-scans those files; the
@@ -359,7 +359,7 @@ object StreamingHierarchyIndex {
     */
   private def cleanupSeedGens(spark: SparkSession,
                               indexPath: String): Unit = {
-    val f = IndexLayout.fs(spark, indexPath)
+    val f = DirCommit.fs(spark, indexPath)
     val root = Dedup.readIndexMeta(spark, indexPath)
     // a live grace window (meta carries retired_dirs) keeps the
     // superseded seed generation; once a compaction boundary promotes
@@ -460,14 +460,5 @@ object StreamingHierarchyIndex {
         s"($mid, $mvec), probed with ($idCol, $vecCol)")
     assignAndProbe(batch, indexPath, root, idCol, vecCol, threshold,
       maxClusters, maxEpochExclusive = None, cache = false)._2
-  }
-
-  /** The epoch committed with the current meta, if any. */
-  private[graft] def lastApplied(spark: SparkSession,
-      indexPath: String): Option[Long] = {
-    val f = IndexLayout.fs(spark, indexPath)
-    if (!f.exists(new Path(indexPath, IndexLayout.MetaFile))) None
-    else Some(IndexLayout.lastEpoch(
-      Dedup.readIndexMeta(spark, indexPath)))
   }
 }

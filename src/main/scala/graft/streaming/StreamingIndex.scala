@@ -6,7 +6,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
 
 import graft.operators.TextSearch
-import graft.sink.MergeSink
+import graft.sink.DirCommit
 
 /** Continuously maintained inverted index — the streaming twin of
   * [[graft.operators.TextSearch.invertedIndexAppend]]: as document
@@ -19,9 +19,9 @@ import graft.sink.MergeSink
   * Exactly-once discipline (the [[StreamingRollup]] pattern verbatim):
   * df addition is NOT idempotent, so each epoch's batchId commits
   * ATOMICALLY with the index — marker written into the staged directory
-  * before the one-rename swap; a replayed epoch compares and skips. A
-  * crash inside the rename window is resumed from `.old` before any
-  * bootstrap decision.
+  * before the [[graft.sink.DirCommit]] swap; a replayed epoch compares
+  * and skips. A crash inside the swap is recovered before any bootstrap
+  * decision.
   *
   * Contract: each document must reach the index EXACTLY once across all
   * epochs — dedup upstream (PK discipline, or
@@ -30,8 +30,6 @@ import graft.sink.MergeSink
   * the index table and its checkpoint are a unit.
   */
 object StreamingIndex {
-
-  private val Marker = "_applied_batch"
 
   def start(spark: SparkSession, sourceDir: String, schema: StructType,
             tablePath: String, checkpoint: String,
@@ -55,12 +53,9 @@ object StreamingIndex {
       tablePath: String, idCol: String, textCol: String,
       maxPostings: Int): Unit = {
     val spark = batch.sparkSession
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fs = new Path(tablePath).getFileSystem(conf)
-    if (!fs.exists(new Path(tablePath)) &&
-        fs.exists(new Path(tablePath + ".old")))
-      fs.rename(new Path(tablePath + ".old"), new Path(tablePath))
-    if (lastApplied(spark, tablePath).exists(_ >= batchId)) return
+    val fs = DirCommit.fs(spark, tablePath)
+    DirCommit.recover(tablePath)
+    if (DirCommit.lastApplied(tablePath).exists(_ >= batchId)) return
     val tableExists = fs.exists(new Path(tablePath))
     val next =
       if (tableExists)
@@ -83,23 +78,21 @@ object StreamingIndex {
     // maintenance resumes here.
     val priorOpt = readStatsJson(fs, tablePath)
     val maintainStats = priorOpt.isDefined || !tableExists
-    val stage = tablePath + ".stage"
-    next.write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(stage)
-    if (maintainStats) {
-      val prior = priorOpt.getOrElse((0L, 0L))
-      val bRow = TextSearch.bm25CorpusStats(batch, idCol, textCol).head()
-      val nextStats = (prior._1 + Option(bRow.get(0))
-          .fold(0L)(_.asInstanceOf[Long]),
-        prior._2 + bRow.getLong(1))
-      val statsOut = fs.create(new Path(stage, StatsFile), true)
-      try statsOut.write(
-        s"""{"sumdl": ${nextStats._1}, "n_docs": ${nextStats._2}}"""
-          .getBytes("UTF-8"))
-      finally statsOut.close()
+    DirCommit.commit(tablePath, Some(batchId)) { stage =>
+      next.write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(stage)
+      if (maintainStats) {
+        val prior = priorOpt.getOrElse((0L, 0L))
+        val bRow = TextSearch.bm25CorpusStats(batch, idCol, textCol).head()
+        val nextStats = (prior._1 + Option(bRow.get(0))
+            .fold(0L)(_.asInstanceOf[Long]),
+          prior._2 + bRow.getLong(1))
+        val statsOut = fs.create(new Path(stage, StatsFile), true)
+        try statsOut.write(
+          s"""{"sumdl": ${nextStats._1}, "n_docs": ${nextStats._2}}"""
+            .getBytes("UTF-8"))
+        finally statsOut.close()
+      }
     }
-    val out = fs.create(new Path(stage, Marker), true)
-    try out.write(batchId.toString.getBytes("UTF-8")) finally out.close()
-    MergeSink.atomicSwapDir(fs, stage, tablePath, tablePath + ".old")
   }
 
   private val StatsFile = "_bm25_stats.json"
@@ -137,8 +130,7 @@ object StreamingIndex {
   def backfillBm25Stats(spark: SparkSession, tablePath: String,
       corpus: org.apache.spark.sql.DataFrame, idCol: String,
       textCol: String): Unit = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fs = new Path(tablePath).getFileSystem(conf)
+    val fs = DirCommit.fs(spark, tablePath)
     require(fs.exists(new Path(tablePath)),
       s"no index table at $tablePath to backfill")
     val row = TextSearch.bm25CorpusStats(corpus, idCol, textCol).head()
@@ -157,8 +149,7 @@ object StreamingIndex {
     * with [[backfillBm25Stats]] over the indexed corpus.
     */
   def readBm25Stats(spark: SparkSession, tablePath: String): DataFrame = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fs = new Path(tablePath).getFileSystem(conf)
+    val fs = DirCommit.fs(spark, tablePath)
     val (sumdl, nDocs) = readStatsJson(fs, tablePath).getOrElse(
       throw new IllegalStateException(
         s"no $StatsFile beside $tablePath - the index predates the " +
@@ -166,21 +157,5 @@ object StreamingIndex {
           "over the indexed corpus"))
     import spark.implicits._
     Seq((sumdl, nDocs)).toDF("sumdl", "n_docs")
-  }
-
-  /** The batchId committed with the current index, if any. */
-  private[streaming] def lastApplied(spark: SparkSession,
-      tablePath: String): Option[Long] = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fs = new Path(tablePath).getFileSystem(conf)
-    val p = new Path(tablePath, Marker)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      try {
-        val s = scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-        s.toLongOption
-      } finally in.close()
-    }
   }
 }

@@ -7,7 +7,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
 
 import graft.operators.Dedup
-import graft.sink.{IndexLayout, Sinks}
+import graft.sink.{DirCommit, IndexLayout, Sinks}
 
 /** Continuously maintained PUBLISHED Jaccard index — the AllPairs
   * family's maintainer, completing the set (exact / minhash flat /
@@ -71,7 +71,7 @@ object StreamingJaccardIndex {
       maxGramPostings: Int = Int.MaxValue): Unit = {
     require(compactEvery >= 1, "compactEvery must be >= 1")
     val spark = batch.sparkSession
-    val f = IndexLayout.fs(spark, indexPath)
+    val f = DirCommit.fs(spark, indexPath)
     IndexLayout.recoverMeta(f, indexPath)
     val metaPath = new Path(indexPath, IndexLayout.MetaFile)
 
@@ -257,14 +257,5 @@ object StreamingJaccardIndex {
           Some(batchId + 1), IndexLayout.JaccardSets),
         batchId)
     }
-  }
-
-  /** The epoch committed with the current sidecar, if any. */
-  private[graft] def lastApplied(spark: SparkSession,
-      indexPath: String): Option[Long] = {
-    val f = IndexLayout.fs(spark, indexPath)
-    if (!f.exists(new Path(indexPath, IndexLayout.MetaFile))) None
-    else Some(IndexLayout.lastEpoch(
-      Dedup.readIndexMeta(spark, indexPath)))
   }
 }

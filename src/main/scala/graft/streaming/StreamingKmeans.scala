@@ -7,7 +7,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 
 import graft.operators.Similarity
-import graft.sink.MergeSink
+import graft.sink.DirCommit
 
 /** Continuously maintained k-means centroids — the streaming twin of
   * [[graft.operators.Similarity.kmeansTrainExact]], in the classic
@@ -31,8 +31,8 @@ import graft.sink.MergeSink
   * Exactly-once: same discipline as [[StreamingRollup]] — sum-addition
   * is NOT idempotent, so the epoch's batchId is staged with the state
   * and published in one atomic swap; replayed epochs compare against the
-  * marker and skip; a crash inside the swap's rename window is resumed
-  * from `.old` before anything else happens.
+  * marker and skip; a crash inside the swap is recovered
+  * ([[graft.sink.DirCommit.recover]]) before anything else happens.
   *
   * Scale shape: state is k x (dim+1) longs — a bounded model artifact
   * read and merged on the driver; the per-batch work is a zero-shuffle
@@ -59,8 +59,6 @@ import graft.sink.MergeSink
   */
 object StreamingKmeans {
 
-  private val Marker = "_applied_batch"
-
   val stateSchema: StructType = StructType(Seq(
     StructField("centroid_id", LongType, nullable = false),
     StructField("n_members", LongType, nullable = false),
@@ -86,12 +84,9 @@ object StreamingKmeans {
       statePath: String, idCol: String, vecCol: String, k: Int,
       quant: Double): Unit = {
     val spark = batch.sparkSession
-    val fs = new Path(statePath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new Path(statePath)) &&
-        fs.exists(new Path(statePath + ".old")))
-      fs.rename(new Path(statePath + ".old"), new Path(statePath))
-    if (lastApplied(spark, statePath).exists(_ >= batchId)) return
+    val fs = DirCommit.fs(spark, statePath)
+    DirCommit.recover(statePath)
+    if (DirCommit.lastApplied(statePath).exists(_ >= batchId)) return
 
     val q = Similarity.quantizeLong(batch, idCol, vecCol, quant)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -143,27 +138,11 @@ object StreamingKmeans {
           }
       }
       import spark.implicits._
-      val stage = statePath + ".stage"
-      next.toDF("centroid_id", "n_members", "cent_sum")
-        .coalesce(1)
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(stage)
-      val out = fs.create(new Path(stage, Marker), true)
-      try out.write(batchId.toString.getBytes("UTF-8")) finally out.close()
-      MergeSink.atomicSwapDir(fs, stage, statePath, statePath + ".old")
+      DirCommit.commit(statePath, Some(batchId)) { stage =>
+        next.toDF("centroid_id", "n_members", "cent_sum")
+          .coalesce(1)
+          .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(stage)
+      }
     } finally q.unpersist()
-  }
-
-  private[streaming] def lastApplied(spark: SparkSession,
-      statePath: String): Option[Long] = {
-    val fs = new Path(statePath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val p = new Path(statePath, Marker)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-        .toLongOption
-      finally in.close()
-    }
   }
 }

@@ -53,7 +53,6 @@ object StreamingMerge {
         else
           MergeSink.flush(batch.sparkSession, batch, tablePath, pks,
             orderCol, hardDelete)
-        ()
       }
       .start()
   }
@@ -112,7 +111,6 @@ object StreamingMerge {
       .foreachBatch { (batch: DataFrame, _: Long) =>
         MergeSink.flushPartitioned(batch.sparkSession, batch, tablePath,
           pks, "_sdc_lsn", targetPartitions, hardDelete)
-        ()
       }
       .start()
   }
@@ -181,7 +179,6 @@ object StreamingMerge {
       case "merge" =>
         MergeSink.flushPartitioned(batch.sparkSession, batch, tablePath,
           pks, orderCol, targetPartitions, hardDelete)
-        ()
       case "delta" =>
         graft.sink.DeltaMerge.flushAuto(batch.sparkSession, batch,
           tablePath, pks, orderCol, hardDelete, compactDeltaFraction)

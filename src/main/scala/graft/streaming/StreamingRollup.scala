@@ -7,7 +7,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
 
 import graft.operators.IncrementalAgg
-import graft.sink.MergeSink
+import graft.sink.DirCommit
 
 /** Continuously maintained rollup — the streaming twin of
   * [[graft.operators.IncrementalAgg]]: a reporting table stays current
@@ -32,8 +32,6 @@ import graft.sink.MergeSink
   */
 object StreamingRollup {
 
-  private val Marker = "_applied_batch"
-
   def start(spark: SparkSession, sourceDir: String, schema: StructType,
             tablePath: String, checkpoint: String,
             keys: Seq[String], valueCol: String, opCol: String = "op",
@@ -55,16 +53,9 @@ object StreamingRollup {
       tablePath: String, keys: Seq[String], valueCol: String,
       opCol: String): Unit = {
     val spark = batch.sparkSession
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fs = new Path(tablePath).getFileSystem(conf)
-    // crash recovery FIRST: a death inside the previous swap's rename
-    // window leaves the table retired to .old and no promoted copy — a
-    // bootstrap from empty here would rebuild from one batch and then
-    // destroy .old, losing all history. Resume the interrupted swap.
-    if (!fs.exists(new Path(tablePath)) &&
-        fs.exists(new Path(tablePath + ".old")))
-      fs.rename(new Path(tablePath + ".old"), new Path(tablePath))
-    if (lastApplied(spark, tablePath).exists(_ >= batchId)) return
+    val fs = DirCommit.fs(spark, tablePath)
+    DirCommit.recover(tablePath)
+    if (DirCommit.lastApplied(tablePath).exists(_ >= batchId)) return
     val base =
       if (fs.exists(new Path(tablePath)))
         spark.read.parquet(tablePath)
@@ -84,26 +75,8 @@ object StreamingRollup {
     val next = IncrementalAgg.maintainSumCount(base, ins, del, keys,
       col(valueCol))
     // stage: rollup parquet + the marker, then ONE atomic swap
-    val stage = tablePath + ".stage"
-    next.write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(stage)
-    val out = fs.create(new Path(stage, Marker), true)
-    try out.write(batchId.toString.getBytes("UTF-8")) finally out.close()
-    MergeSink.atomicSwapDir(fs, stage, tablePath, tablePath + ".old")
-  }
-
-  /** The batchId committed with the current rollup, if any. */
-  private[streaming] def lastApplied(spark: SparkSession,
-      tablePath: String): Option[Long] = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fs = new Path(tablePath).getFileSystem(conf)
-    val p = new Path(tablePath, Marker)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      try {
-        val s = scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-        s.toLongOption
-      } finally in.close()
+    DirCommit.commit(tablePath, Some(batchId)) { stage =>
+      next.write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(stage)
     }
   }
 }

@@ -7,7 +7,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
 
 import graft.operators.Sampling
-import graft.sink.MergeSink
+import graft.sink.DirCommit
 
 /** Streaming twins of the sampling family — the last batch-only
   * sampling shapes after round 10's StreamingPack.
@@ -43,8 +43,6 @@ import graft.sink.MergeSink
   */
 object StreamingSample {
 
-  private val Marker = "_applied_batch"
-
   /** Stateless streaming stratified sample — see class doc. */
   def stratified(stream: DataFrame, keyCol: String, strataCol: String,
                  fractions: Map[String, Double],
@@ -78,14 +76,9 @@ object StreamingSample {
   private[streaming] def applyBatch(batch: DataFrame, batchId: Long,
       tablePath: String, sourceCol: String, textCol: String): Unit = {
     val spark = batch.sparkSession
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fs = new Path(tablePath).getFileSystem(conf)
-    // resume an interrupted swap before anything else (same recovery
-    // rule as StreamingRollup: never bootstrap-from-empty over a .old)
-    if (!fs.exists(new Path(tablePath)) &&
-        fs.exists(new Path(tablePath + ".old")))
-      fs.rename(new Path(tablePath + ".old"), new Path(tablePath))
-    if (lastApplied(spark, tablePath).exists(_ >= batchId)) return
+    val fs = DirCommit.fs(spark, tablePath)
+    DirCommit.recover(tablePath)
+    if (DirCommit.lastApplied(tablePath).exists(_ >= batchId)) return
     val tokens =
       size(split(trim(lower(col(textCol))), "\\s+")).cast("long")
     val delta = batch
@@ -97,24 +90,8 @@ object StreamingSample {
           .groupBy("source")
           .agg(sum("n_docs").as("n_docs"), sum("n_tokens").as("n_tokens"))
       else delta
-    val stage = tablePath + ".stage"
-    next.write.mode(SaveMode.Overwrite).parquet(stage)
-    val out = fs.create(new Path(stage, Marker), true)
-    try out.write(batchId.toString.getBytes("UTF-8")) finally out.close()
-    MergeSink.atomicSwapDir(fs, stage, tablePath, tablePath + ".old")
-  }
-
-  private[streaming] def lastApplied(spark: SparkSession,
-      tablePath: String): Option[Long] = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fs = new Path(tablePath).getFileSystem(conf)
-    val p = new Path(tablePath, Marker)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-        .toLongOption
-      finally in.close()
+    DirCommit.commit(tablePath, Some(batchId)) { stage =>
+      next.write.mode(SaveMode.Overwrite).parquet(stage)
     }
   }
 }

@@ -84,8 +84,7 @@ object StreamingSignatureIndex {
       threshold: Double, maxBucket: Int, bloomK: Int,
       bloomM: Int): Unit = {
     val spark = batch.sparkSession
-    val fs = new Path(indexPath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = graft.sink.DirCommit.fs(spark, indexPath)
     graft.sink.IndexLayout.recoverMeta(fs, indexPath)
     val metaPath = new Path(indexPath, Meta)
     val sigsDir = s"$indexPath/signatures"
@@ -155,15 +154,5 @@ object StreamingSignatureIndex {
         throw new java.io.IOException(
           s"signature index: could not publish $stage as $epochDir")
     } else fs.delete(new Path(stage), true)
-  }
-
-  /** The epoch committed with the current sidecar, if any. */
-  private[graft] def lastApplied(spark: SparkSession,
-      indexPath: String): Option[Long] = {
-    val fs = new Path(indexPath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new Path(indexPath, Meta))) None
-    else Some(Dedup.metaLong(
-      Dedup.readIndexMeta(spark, indexPath), "last_epoch"))
   }
 }

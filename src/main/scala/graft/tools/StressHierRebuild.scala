@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.operators.Dedup
-import graft.sink.IndexLayout
+import graft.sink.{DirCommit, IndexLayout}
 
 /** Soak the maintained hierarchical-SemDeDup layout ACROSS a
   * drift-triggered rebuild at corpus scale — the composition the r19
@@ -86,7 +86,7 @@ object StressHierRebuild {
 
     val idx = s"$workDir/hier-index"
     val pairs = s"$workDir/hier-pairs"
-    val fsys = IndexLayout.fs(spark, idx)
+    val fsys = DirCommit.fs(spark, idx)
     def baseFiles(): (String, Int, Long) = {
       val root = Dedup.readIndexMeta(spark, idx)
       val base = IndexLayout.baseDir(root, IndexLayout.HierarchyAssigned)

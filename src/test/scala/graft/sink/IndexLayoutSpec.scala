@@ -15,7 +15,7 @@ class IndexLayoutSpec extends SparkSpecBase {
   test("healOrphans deletes only generated dir shapes, never " +
       "prefix-sharing user dirs") {
     val dir = Files.createTempDirectory("layout-heal").toString
-    val f = IndexLayout.fs(spark, dir)
+    val f = DirCommit.fs(spark, dir)
     def mk(name: String): Unit = { f.mkdirs(new Path(dir, name)); () }
     // generated shapes: the bootstrap base and superseded compactions
     mk("postings"); mk("postings_v3"); mk("postings_v7"); mk("epochs")
@@ -37,7 +37,7 @@ class IndexLayoutSpec extends SparkSpecBase {
   test("healOrphans on the vectors table leaves the epochs of BOTH " +
       "tables alone") {
     val dir = Files.createTempDirectory("layout-heal2").toString
-    val f = IndexLayout.fs(spark, dir)
+    val f = DirCommit.fs(spark, dir)
     def mk(name: String): Unit = { f.mkdirs(new Path(dir, name)); () }
     mk("vectors"); mk("vectors_v2"); mk("vectors_epochs"); mk("epochs")
     IndexLayout.healOrphans(spark, dir, keepDir = "vectors_v2",

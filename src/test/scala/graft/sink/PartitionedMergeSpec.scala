@@ -49,8 +49,9 @@ class PartitionedMergeSpec extends SparkSpecBase {
       .distinct().as[Int].collect().toSet
     assert(touched.size < 8, "test batch must not touch every bucket")
 
-    val merged = MergeSink.flushPartitioned(spark, batch, tablePath,
+    MergeSink.flushPartitioned(spark, batch, tablePath,
       Seq("id"), "seq", numParts = 8)
+    val merged = spark.read.parquet(tablePath).drop(MergeSink.PartCol)
 
     // contents: updated keys win, new key inserted, others untouched
     val got = merged.orderBy("id").as[(Long, String, Long)].collect()
@@ -88,8 +89,9 @@ class PartitionedMergeSpec extends SparkSpecBase {
     val touched = wide.select(MergeSink.pkBucket(Seq("id"), 8).as("b"))
       .distinct().count()
     assert(touched >= 6, s"test batch should be wide, touched=$touched")
-    val merged = MergeSink.flushPartitioned(spark, wide, tablePath,
+    MergeSink.flushPartitioned(spark, wide, tablePath,
       Seq("id"), "seq", numParts = 8)
+    val merged = spark.read.parquet(tablePath).drop(MergeSink.PartCol)
     assert(merged.count() == 250)
     assert(merged.filter(col("id") === 104L).select("v")
       .as[String].head() == "w104")
@@ -126,8 +128,9 @@ class PartitionedMergeSpec extends SparkSpecBase {
     MergeSink.flushPartitioned(spark, b1, tablePath, Seq("id"), "seq",
       numParts = 4)
     val b2 = Seq((2L, "b", 2L, 9.5)).toDF("id", "v", "seq", "extra")
-    val merged = MergeSink.flushPartitioned(spark, b2, tablePath,
+    MergeSink.flushPartitioned(spark, b2, tablePath,
       Seq("id"), "seq", numParts = 4)
+    val merged = spark.read.parquet(tablePath).drop(MergeSink.PartCol)
     assert(merged.columns.contains("extra"))
     assert(merged.filter(col("id") === 1L).select("extra").head().isNullAt(0))
     assert(merged.count() == 2)

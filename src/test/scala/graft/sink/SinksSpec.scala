@@ -66,10 +66,9 @@ class SinksSpec extends SparkSpecBase {
     val back = spark.read.parquet(dir)
     assert(back.count() == 500L)
     assert(back.except(df).isEmpty && df.except(back).isEmpty)
-    // no leftover staging/retired dirs
+    // no leftover staging/retired dirs (DirCommit's t.stage and t.old)
     val names = new java.io.File(dir).getParentFile.list().toSet
-    assert(!names.exists(_.contains("__compacting")), names.toString)
-    assert(!names.exists(_.contains("__retired")), names.toString)
+    assert(names == Set("t"), names.toString)
   }
 
   test("writeRangeSorted: disjoint shard ranges; readRange prunes files") {

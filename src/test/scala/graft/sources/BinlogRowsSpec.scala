@@ -64,8 +64,9 @@ class BinlogRowsSpec extends SparkSpecBase {
   test("decoded stream merges to the expected final table") {
     val decoded = BinlogRows.decode(fixture, "payload", "db", "t", rowSchema)
     val dir = java.nio.file.Files.createTempDirectory("binlog").toString
-    val merged = MergeSink.flush(spark, decoded, s"$dir/t", Seq("id"),
+    MergeSink.flush(spark, decoded, s"$dir/t", Seq("id"),
       "_binlog_seq", hardDelete = true)
+    val merged = spark.read.parquet(s"$dir/t")
     val rows = merged.select("id", "v")
       .as[(Option[Long], Option[String])].collect().toSet
     // id=1 updated, id=2 deleted, id=3 inserted post-rotation

@@ -46,9 +46,10 @@ class ChangeStreamsSpec extends SparkSpecBase {
     val source = Seq((1L, "a2"), (2L, "b")).toDF("_id", "v")
     val refetched = StreamingMerge.refetchUpdates(decoded, source, "_id")
     val dir = java.nio.file.Files.createTempDirectory("cs").toString
-    val merged = MergeSink.flush(spark,
+    MergeSink.flush(spark,
       StreamingMerge.applyEnvelope(refetched), s"$dir/t", Seq("_id"),
       "_cs_token", hardDelete = true)
+    val merged = spark.read.parquet(s"$dir/t")
     val rows = merged.select("_id", "v")
       .as[(Option[Long], Option[String])].collect().toSet
     // id=1 refetched as a2; id=2's buffered update is beaten by the later

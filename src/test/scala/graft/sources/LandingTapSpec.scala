@@ -73,7 +73,8 @@ class LandingTapSpec extends SparkSpecBase {
     // a later page updates issue 1's state
     val upd = Seq((1L, "2024-01-07", "closed", 2L))
       .toDF("id", "updated_at", "state", "_seq")
-    val merged = MergeSink.flush(spark, upd, tablePath, Seq("id"), "_seq")
+    MergeSink.flush(spark, upd, tablePath, Seq("id"), "_seq")
+    val merged = spark.read.parquet(tablePath)
     assert(merged.count() == 5)
     assert(merged.filter(col("id") === 1L).select("state")
       .as[String].head() == "closed")

@@ -82,8 +82,9 @@ class Wal2JsonSpec extends SparkSpecBase {
       rowSchema)
     val batch = StreamingMerge.applyEnvelope(decoded)
     val dir = java.nio.file.Files.createTempDirectory("wal2json").toString
-    val merged = MergeSink.flush(spark, batch, s"$dir/t", Seq("id"),
+    MergeSink.flush(spark, batch, s"$dir/t", Seq("id"),
       "_sdc_lsn", hardDelete = true)
+    val merged = spark.read.parquet(s"$dir/t")
     val rows = merged.select("id", "name", "amount")
       .as[(Option[Long], Option[String], Option[Double])].collect().toSeq
     // id=2 inserted then deleted; id=1 inserted then updated

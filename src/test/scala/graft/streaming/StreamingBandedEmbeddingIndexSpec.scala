@@ -5,7 +5,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.SparkSpecBase
 import graft.operators.Dedup
-import graft.sink.IndexLayout
+import graft.sink.{DirCommit, IndexLayout}
 
 /** StreamingBandedEmbeddingIndex: the two-table maintained layout
   * (postings + id-sorted vector sidecar) answers every probe exactly
@@ -75,7 +75,7 @@ class StreamingBandedEmbeddingIndexSpec extends SparkSpecBase {
     // epoch 0: bootstrap (planes frozen from b1, both bases written)
     b1.coalesce(1).write.parquet(s"$srcDir/f1")
     run()
-    assert(StreamingBandedEmbeddingIndex.lastApplied(spark, idxDir)
+    assert(graft.sink.IndexLayout.lastApplied(spark, idxDir)
       .contains(0L))
     // the probe must source vectors from the maintained sidecar: the
     // corpusEmb argument is poisoned with zero vectors
@@ -92,7 +92,7 @@ class StreamingBandedEmbeddingIndexSpec extends SparkSpecBase {
     val expect1 = direct(idxDir, b1, b2)
     assert(expect1.nonEmpty, "fixture sanity: the copied vector hits")
     assert(pairSet(spark.read.parquet(s"$pairsDir/epoch=1")) == expect1)
-    val fs = IndexLayout.fs(spark, idxDir)
+    val fs = DirCommit.fs(spark, idxDir)
     assert(fs.exists(new org.apache.hadoop.fs.Path(
       s"$idxDir/epochs/epoch=1")), "postings epoch partition expected")
     assert(fs.exists(new org.apache.hadoop.fs.Path(

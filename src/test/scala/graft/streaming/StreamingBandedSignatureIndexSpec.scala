@@ -5,7 +5,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.SparkSpecBase
 import graft.operators.Dedup
-import graft.sink.IndexLayout
+import graft.sink.{DirCommit, IndexLayout}
 
 /** StreamingBandedSignatureIndex: the maintained banded layout answers
   * every probe exactly like a from-scratch batch publish over the same
@@ -54,7 +54,7 @@ class StreamingBandedSignatureIndexSpec extends SparkSpecBase {
       schema, idxDir, pairsDir, ckpt, "doc_id", "text",
       compactEvery = 2)
     q1.processAllAvailable(); q1.stop()
-    assert(StreamingBandedSignatureIndex.lastApplied(spark, idxDir)
+    assert(graft.sink.IndexLayout.lastApplied(spark, idxDir)
       .contains(0L))
     assert(pairSet(Dedup.minhashNearDupsAgainstBandedIndex(probeBatch,
         idxDir, "doc_id", "text")) ==
@@ -74,7 +74,7 @@ class StreamingBandedSignatureIndexSpec extends SparkSpecBase {
       "doc_id", "text"))
     assert(expect1.nonEmpty, "fixture sanity: the echo must collide")
     assert(pairSet(spark.read.parquet(s"$pairsDir/epoch=1")) == expect1)
-    val fs = IndexLayout.fs(spark, idxDir)
+    val fs = DirCommit.fs(spark, idxDir)
     assert(fs.exists(new org.apache.hadoop.fs.Path(
         s"$idxDir/epochs/epoch=1")),
       "epoch 1 must ride as an append partition (tail below " +

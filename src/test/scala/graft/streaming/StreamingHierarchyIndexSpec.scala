@@ -5,7 +5,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.SparkSpecBase
 import graft.operators.{Dedup, Similarity}
-import graft.sink.IndexLayout
+import graft.sink.{DirCommit, IndexLayout}
 
 /** StreamingHierarchyIndex: the maintained hierarchical-SemDeDup
   * layout freezes its tree at bootstrap, per-epoch pair output equals
@@ -82,7 +82,7 @@ class StreamingHierarchyIndexSpec extends SparkSpecBase {
     // target 8 -> k1 = k2 = 2) and both seed levels freeze
     b1.coalesce(1).write.parquet(s"$srcDir/f1")
     run()
-    assert(StreamingHierarchyIndex.lastApplied(spark, idxDir)
+    assert(graft.sink.IndexLayout.lastApplied(spark, idxDir)
       .contains(0L))
     val root0 = Dedup.readIndexMeta(spark, idxDir)
     assert(Dedup.metaInt(root0, "k1") == 2 &&
@@ -97,7 +97,7 @@ class StreamingHierarchyIndexSpec extends SparkSpecBase {
     val expect1 = direct(idxDir, b1, b2)
     assert(expect1.nonEmpty, "fixture sanity: the copied vector hits")
     assert(pairSet(spark.read.parquet(s"$pairsDir/epoch=1")) == expect1)
-    val fs = IndexLayout.fs(spark, idxDir)
+    val fs = DirCommit.fs(spark, idxDir)
     assert(fs.exists(new org.apache.hadoop.fs.Path(
       s"$idxDir/assigned_epochs/epoch=1")),
       "assignment epoch partition expected")
@@ -186,7 +186,7 @@ class StreamingHierarchyIndexSpec extends SparkSpecBase {
     val (srcDir, idxDir, pairsDir, ckpt) =
       (s"$dir/in", s"$dir/idx", s"$dir/pairs", s"$dir/ckpt")
     new java.io.File(srcDir).mkdirs()
-    val fs = IndexLayout.fs(spark, idxDir)
+    val fs = DirCommit.fs(spark, idxDir)
     def meta() = Dedup.readIndexMeta(spark, idxDir)
     def metaStr(n: String) = Dedup.metaStr(meta(), n)
     def run(): Unit = {

@@ -41,7 +41,7 @@ class StreamingIndexSpec extends SparkSpecBase {
       table, ckpt, "doc_id", "text", Cap)
     q1.processAllAvailable(); q1.stop()
     assert(readIdx(table) == rebuilt(b1.toDF("doc_id", "text")))
-    assert(StreamingIndex.lastApplied(spark, table).contains(0L))
+    assert(graft.sink.DirCommit.lastApplied(table).contains(0L))
 
     // epoch 2 across a restart: capped term "t" must re-admit doc 0
     b2.toDF("doc_id", "text").coalesce(1).write.parquet(s"$srcDir/f2")
@@ -52,7 +52,7 @@ class StreamingIndexSpec extends SparkSpecBase {
     val all = (b1 ++ b2).toDF("doc_id", "text")
     assert(readIdx(table) == rebuilt(all))
     assert(readIdx(table).contains(("t", 6L, 0L, 0L)))
-    assert(StreamingIndex.lastApplied(spark, table).contains(1L))
+    assert(graft.sink.DirCommit.lastApplied(table).contains(1L))
 
     // at-least-once replay of an applied epoch must not double df
     StreamingIndex.applyBatch(b2.toDF("doc_id", "text"), batchId = 1L,

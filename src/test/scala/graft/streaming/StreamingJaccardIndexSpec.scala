@@ -5,7 +5,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.SparkSpecBase
 import graft.operators.Dedup
-import graft.sink.IndexLayout
+import graft.sink.{DirCommit, IndexLayout}
 
 /** StreamingJaccardIndex: epoch appends under the FROZEN df order
   * answer every probe exactly like a from-scratch rebuild (exact
@@ -66,7 +66,7 @@ class StreamingJaccardIndexSpec extends SparkSpecBase {
     // epoch 0: bootstrap is a one-batch frozen generation
     b1.toDF("doc_id", "text").coalesce(1).write.parquet(s"$srcDir/f1")
     run()
-    assert(StreamingJaccardIndex.lastApplied(spark, idxDir)
+    assert(graft.sink.IndexLayout.lastApplied(spark, idxDir)
       .contains(0L))
     val m0 = pairSet(Dedup.ngramJaccardAgainstPath(probeBatch, idxDir,
       "doc_id", "text"))
@@ -82,7 +82,7 @@ class StreamingJaccardIndexSpec extends SparkSpecBase {
       b2.toDF("doc_id", "text"))
     assert(expect1.nonEmpty, "fixture sanity: the echo must match")
     assert(pairSet(spark.read.parquet(s"$pairsDir/epoch=1")) == expect1)
-    val fs = IndexLayout.fs(spark, idxDir)
+    val fs = DirCommit.fs(spark, idxDir)
     assert(fs.exists(new org.apache.hadoop.fs.Path(
       s"$idxDir/sets_epochs/epoch=1")), "sets epoch partition expected")
     assert(fs.exists(new org.apache.hadoop.fs.Path(
@@ -220,7 +220,7 @@ class StreamingJaccardIndexSpec extends SparkSpecBase {
 
     // 3) a pre-sidecar layout (meta without gcounts fields) falls back
     // to recounting and keeps appending without the counts table
-    val f = IndexLayout.fs(spark, idxDir)
+    val f = DirCommit.fs(spark, idxDir)
     val metaTxt = {
       val in = f.open(new org.apache.hadoop.fs.Path(idxDir,
         IndexLayout.MetaFile))
@@ -290,7 +290,7 @@ class StreamingJaccardIndexSpec extends SparkSpecBase {
 
     // strip to the r15 shape: pos-less prefix base, no gcounts, no
     // recorded schemas (pre-r16 metas carried none)
-    val f = IndexLayout.fs(spark, idxDir)
+    val f = DirCommit.fs(spark, idxDir)
     val root0 = Dedup.readIndexMeta(spark, idxDir)
     assert(prefixCols(root0).contains("pos"), "fixture sanity")
     graft.sink.Sinks.writeRangeSorted(

@@ -2,12 +2,12 @@ package graft.streaming
 
 import java.nio.file.Files
 import org.apache.spark.sql.functions._
-import graft.SparkSpecBase
+import graft.sink.{CrashPoints, DirCommit}
 
 /** StreamingRollup: continuously maintained sum/count rollup with the
   * applied-batch marker committed atomically with the table.
   */
-class StreamingRollupSpec extends SparkSpecBase {
+class StreamingRollupSpec extends CrashPoints {
   import spark.implicits._
 
   private val schema = "k STRING, v DOUBLE, op STRING"
@@ -33,7 +33,7 @@ class StreamingRollupSpec extends SparkSpecBase {
       table, ckpt, Seq("k"), "v")
     q1.processAllAvailable(); q1.stop()
     assert(readRollup(table) == Map("a" -> ((2L, 3.0)), "b" -> ((1L, 5.0))))
-    assert(StreamingRollup.lastApplied(spark, table).contains(0L))
+    assert(DirCommit.lastApplied(table).contains(0L))
 
     // second epoch: an update to a (D old + I new) and b fully deleted
     Seq(("a", 2.0, "D"), ("a", 6.0, "I"), ("b", 5.0, "D"))
@@ -45,7 +45,7 @@ class StreamingRollupSpec extends SparkSpecBase {
     q2.processAllAvailable(); q2.stop()
     // a: rows 2-1+1=2, sum 3-2+6=7; b vanished
     assert(readRollup(table) == Map("a" -> ((2L, 7.0))))
-    assert(StreamingRollup.lastApplied(spark, table).contains(1L))
+    assert(DirCommit.lastApplied(table).contains(1L))
 
     // at-least-once replay of an ALREADY-APPLIED epoch is a no-op: the
     // marker committed with the table wins over the re-delivered batch
@@ -86,5 +86,18 @@ class StreamingRollupSpec extends SparkSpecBase {
     assert(ex.getMessage.contains("unknown op tag") ||
       Option(ex.getCause).exists(
         _.getMessage.contains("unknown op tag")), ex.toString)
+  }
+
+  test("any crash in an epoch's commit, then a replay, gives the " +
+    "no-crash rollup and marker") {
+    val e0 = Seq(("a", 1.0, "I"), ("b", 5.0, "I")).toDF("k", "v", "op")
+    val e1 = Seq(("a", 1.0, "D"), ("a", 4.0, "I"), ("c", 2.0, "I"))
+      .toDF("k", "v", "op")
+    val n = everyCrashPoint(
+      d => StreamingRollup.applyBatch(e0, 0L, s"$d/r", Seq("k"), "v", "op"),
+      d => StreamingRollup.applyBatch(e1, 1L, s"$d/r", Seq("k"), "v", "op"),
+      d => spark.read.parquet(s"$d/r"),
+      d => DirCommit.lastApplied(s"$d/r"))
+    assert(n >= 4, s"only $n crash points")
   }
 }

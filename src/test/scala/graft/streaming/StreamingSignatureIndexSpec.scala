@@ -53,7 +53,7 @@ class StreamingSignatureIndexSpec extends SparkSpecBase {
     q1.processAllAvailable(); q1.stop()
     val idx1 = Dedup.readSignatureIndex(spark, idxDir)
     assert(sigSet(idx1.sigs) == sigSet(sigsOf(b1.toDF("doc_id", "text"))))
-    assert(StreamingSignatureIndex.lastApplied(spark, idxDir)
+    assert(graft.sink.IndexLayout.lastApplied(spark, idxDir)
       .contains(0L))
     assert(idx1.bloomBits.sameElements(
       Dedup.buildMinhashBandBloom(sigsOf(b1.toDF("doc_id", "text")))),
@@ -123,7 +123,7 @@ class StreamingSignatureIndexSpec extends SparkSpecBase {
     StreamingSignatureIndex.applyBatch(b3.toDF("doc_id", "text"), 2L,
       idxDir, pairsDir, "doc_id", "text", 3, 12, 3, 0.5,
       Int.MaxValue, 5, 1 << 16)
-    assert(StreamingSignatureIndex.lastApplied(spark, idxDir)
+    assert(graft.sink.IndexLayout.lastApplied(spark, idxDir)
       .contains(2L), "meta must be recovered from the .next window")
   }
 
