@@ -130,10 +130,6 @@ object Planner {
     }
   }
 
-  /** Run all selected streams; persists state after each stream (the
-    * reference throttles state writes; per-stream granularity is our
-    * micro-batch commit cadence).
-    */
   /** Stop-marker path for a pipeline — `stop_tap` writes it, [[run]]
     * checks it between streams (the reference SIGTERMs the tap process;
     * our unit of graceful interruption is the stream boundary, where
@@ -142,6 +138,10 @@ object Planner {
   def stopMarkerPath(pipeline: PipelineSpec): String =
     pipeline.statePath + ".stop"
 
+  /** Run all selected streams; persists state after each stream (the
+    * reference throttles state writes; per-stream granularity is our
+    * micro-batch commit cadence).
+    */
   def run(spark: SparkSession, pipeline: PipelineSpec,
           sourcePathFor: String => String,
           onError: (String, Throwable) => Unit = defaultAlert,

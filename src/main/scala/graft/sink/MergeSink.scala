@@ -27,10 +27,17 @@ import graft.catalog.SchemaDiff
   * whether a target exists. A re-run of the same batch converges to the
   * no-crash table: the merge is last-write-wins on `orderCol`.
   *
-  * All merge logic is a declarative plan (window dedup + join + coalesce)
-  * so Catalyst is free to broadcast the small side, and AQE handles skew.
-  * At 100 TB, the upsert join shuffles on the PK — the same partitioning
-  * the target table is bucketed by, so repeated merges co-locate.
+  * All merge logic is a declarative plan (window dedup + join + coalesce),
+  * and AQE handles skew. The upsert is a full outer join, which Spark
+  * cannot broadcast, so both sides shuffle on the PK. Neither `flush`'s
+  * flat table nor `flushPartitioned`'s `__p=` directory layout carries
+  * bucketing Spark can use, so every merge re-shuffles all the target
+  * rows it reads: the whole table on a whole-layout rewrite, the touched
+  * buckets on the per-bucket path. That shuffle, not the batch's, is the
+  * merge's large one (perfbench `replicate`, traced, 4 cores: 7.65 MB
+  * merge shuffle against 0.21 MB for the dedup, per whole-layout
+  * operation). Only [[flushBucketed]], over a catalog bucketed table,
+  * shuffles the batch alone.
   */
 object MergeSink {
 
@@ -177,13 +184,18 @@ object MergeSink {
     DirCommit.recover(tablePath)
     val deduped = dedupLastWins(batch, pks, orderCol)
 
-    // co-locate each bucket into one task before partitionBy: otherwise
-    // EVERY task writes a file into EVERY touched bucket (tasks × buckets
-    // small files — measured 14× slower locally and a small-file
-    // explosion at scale)
-    def writeStage(df: DataFrame, tasks: Int)(stage: String): Unit =
+    // hash-partition on the bucket id before partitionBy so each bucket
+    // lands in exactly one task: otherwise EVERY task writes a file into
+    // EVERY touched bucket (tasks × buckets small files — measured 14×
+    // slower locally and a small-file explosion at scale). One task per
+    // core, not per bucket: the writer sorts each task's rows by `__p`,
+    // so a task writes its buckets one after another, one file each, and
+    // the fixed per-task cost is paid min(buckets, cores) times
+    def writeStage(df: DataFrame, buckets: Int)(stage: String): Unit =
       df.withColumn(PartCol, pkBucket(pks, numParts))
-        .repartition(tasks, col(PartCol))
+        .repartition(
+          math.min(buckets, spark.sparkContext.defaultParallelism),
+          col(PartCol))
         .write.partitionBy(PartCol).mode(SaveMode.Overwrite).parquet(stage)
     def commitWhole(df: DataFrame): Unit =
       DirCommit.commit(tablePath)(writeStage(df, numParts))
@@ -225,9 +237,9 @@ object MergeSink {
           } else if (touched.nonEmpty) {
             val slice = target
               .filter(col(PartCol).isin(touched.toSeq: _*)).drop(PartCol)
-            // one task per touched bucket, not numParts mostly-empty ones;
-            // a bucket missing from the stage (hard delete emptied it)
-            // ends empty
+            // sized to the touched buckets, not numParts mostly-empty
+            // ones; a bucket missing from the stage (hard delete emptied
+            // it) ends empty
             DirCommit.commitParts(tablePath, touched.map(b => s"$PartCol=$b"))(
               writeStage(merge(slice, d, pks, hardDelete), touched.length))
           }

@@ -76,4 +76,7 @@ final case class PipelineSpec(
     // rewrite only the partitions a batch touches (MergeSink
     // .flushPartitioned). Size so one partition's data fits an executor
     // comfortably — at 100 TB / 4096 parts that's ~25 GB per partition.
+    // It sets the file count, not the write's parallelism: a layout write
+    // runs min(buckets written, cores) tasks and still writes one file
+    // per bucket.
     targetPartitions: Int = 64)

@@ -1,7 +1,12 @@
 package graft.sink
 
 import java.nio.file.Files
+import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
+import scala.jdk.CollectionConverters._
 import org.apache.hadoop.fs.Path
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
+  SparkListenerStageCompleted}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.SparkSpecBase
 
@@ -29,6 +34,79 @@ class PartitionedMergeSpec extends SparkSpecBase {
     val m = s"${MergeSink.PartCol}=(\\d+)".r
       .findFirstMatchIn(path)
     m.map(_.group(1).toInt).getOrElse(sys.error(s"no bucket in $path"))
+  }
+
+  /** Task counts of the stages that wrote output while `body` ran. A
+    * marker job run after `body` flushes the ordered listener queue.
+    */
+  private def writeStageTasks(body: => Unit): Seq[Int] = {
+    val tasks = new ConcurrentLinkedQueue[Int]()
+    val marker = s"pmerge-layout-${System.nanoTime}"
+    val markerSeen = new CountDownLatch(1)
+    val l = new SparkListener {
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+        if (Option(e.stageInfo.taskMetrics)
+            .exists(_.outputMetrics.recordsWritten > 0))
+          tasks.add(e.stageInfo.numTasks)
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        if (Option(js.properties).map(_.getProperty("spark.jobGroup.id"))
+            .contains(marker)) markerSeen.countDown()
+    }
+    spark.sparkContext.addSparkListener(l)
+    try {
+      body
+      spark.sparkContext.setJobGroup(marker, "flush the listener queue")
+      try spark.range(1).count()
+      finally spark.sparkContext.clearJobGroup()
+      assert(markerSeen.await(30, TimeUnit.SECONDS),
+        "marker job never reached the listener")
+    } finally spark.sparkContext.removeSparkListener(l)
+    tasks.asScala.toSeq
+  }
+
+  /** `.parquet` files per `__p=<b>` directory of the layout. */
+  private def filesPerBucket(tablePath: String): Map[Int, Int] =
+    fileStates(tablePath).keys.groupBy(bucketOf).view.mapValues(_.size).toMap
+
+  test("layout writes run at most one task per core, one file per bucket") {
+    val dir = Files.createTempDirectory("pmerge-layout").toString
+    val tablePath = s"$dir/t"
+    val numParts = 64
+    val cores = spark.sparkContext.defaultParallelism
+    assert(cores < numParts)
+    def touched(df: DataFrame): Long =
+      df.select(MergeSink.pkBucket(Seq("id"), numParts)).distinct().count()
+    def flushChecked(what: String, batch: DataFrame): Unit = {
+      val tasks = writeStageTasks(MergeSink.flushPartitioned(spark, batch,
+        tablePath, Seq("id"), "seq", numParts = numParts))
+      assert(tasks.nonEmpty, s"$what: no stage wrote output")
+      assert(tasks.forall(_ <= cores),
+        s"$what: write stages ran $tasks tasks on $cores cores")
+      val files = filesPerBucket(tablePath)
+      assert(files.nonEmpty && files.values.forall(_ == 1),
+        s"$what: every bucket must hold exactly one file: $files")
+    }
+
+    // bootstrap: commitWhole over the deduped batch
+    val initial = (1L to 2000L).map(i => (i, s"v$i", 1L))
+      .toDF("id", "v", "seq")
+    flushChecked("bootstrap", initial)
+    assert(filesPerBucket(tablePath).size == numParts)
+
+    // whole-layout merge: at least 3/4 of the buckets touched
+    val wide = (1L to 400L).map(i => (i * 7, s"w$i", 2L))
+      .toDF("id", "v", "seq")
+    assert(touched(wide) >= numParts * 3 / 4)
+    flushChecked("whole-layout merge", wide)
+
+    // per-bucket merge: more buckets than cores, fewer than 3/4
+    val narrow = (3001L to 3012L).map(i => (i, s"n$i", 3L))
+      .toDF("id", "v", "seq")
+    val n = touched(narrow)
+    assert(n > cores && n < numParts * 3 / 4, s"narrow batch touched $n")
+    flushChecked("per-bucket merge", narrow)
+
+    assert(spark.read.parquet(tablePath).count() == 2000 + 400 - 285 + 12)
   }
 
   test("incremental flush leaves untouched partitions byte-identical") {
