@@ -89,9 +89,10 @@ object SparkEntry {
     // zero-shuffle assignment, integer sum updates). The incremental-CC
     // registry query is deliberately NOT a headline: it rebuilds its
     // own "existing" state (old-corpus CC + signature index) per run,
-    // which production stores — tools/StressCCMerge measures the merge
-    // itself against cached base labels (11s vs a 27s rebuild at 1.6M
-    // nodes / 1.3M edges, and the gap widens with corpus size: the
+    // which production stores. The merge itself against cached base
+    // labels took 11s vs a 27s rebuild at 1.6M nodes / 1.3M edges
+    // (BASELINE.md "Round-12 continuation", the tools/StressCCMerge of
+    // commit 0f59867), and the gap widens with corpus size: the
     // merge's iterative work is bounded by the touched components, not
     // the graph)
     "kmeans_train",

@@ -33,16 +33,10 @@ object Cli {
 
   def main(args: Array[String]): Unit = {
     if (args.isEmpty) { usage(); sys.exit(2) }
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("GRAFT_MASTER", "local[8]"))
-      .appName("graft-cli")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // GRAFT_MASTER points the CLI at a cluster; unset, it runs locally
+    val b = graft.Sessions.builder().appName("graft-cli")
+    sys.env.get("GRAFT_MASTER").foreach(b.master)
+    val spark = graft.Sessions.start(b)
     // the graft_* SQL surface is part of the product: any spark.sql a
     // CLI-driven pipeline runs sees the same deterministic primitives
     graft.functions.GraftFunctions.register(spark)

@@ -96,7 +96,7 @@ object Decontamination {
         org.apache.spark.sql.types.StructField("gram",
           org.apache.spark.sql.types.StringType))))
       .parquet(s"$path/grams"),
-      Dedup.metaInt(Dedup.readIndexMeta(spark, path), "shingle_k"))
+      Dedup.metaInt(graft.sink.IndexLayout.readMeta(spark, path), "shingle_k"))
 
   /** SEMANTIC decontamination — the embedding-space complement of the
     * n-gram screen: a training document is contaminated iff its

@@ -325,7 +325,8 @@ object Dedup {
     // cheap posexplode per side. r20 A/B'd the alternative — repartition
     // the banded frame on the bucket key and persist that, making the
     // self-join exchange-free — and it measured SLOWER at bench scale
-    // (canary-normalized 4.87 vs 3.86 units, tools/ProfileMinhash): at
+    // (canary-normalized 4.87 vs 3.86 units, measured with the
+    // tools/ProfileMinhash of commit 045a9c4): at
     // broadcastable banded sizes AQE already plans the join with one
     // tiny broadcast, so the forced up-front exchange + the ~4x larger
     // cache buy nothing. The banded-persist spelling remains the right
@@ -422,7 +423,8 @@ object Dedup {
     // ONE scan (the member list is derived from the already-materialized
     // pair set, so AQE sizes the semi side at runtime) and persist the
     // survivor postings; without this the executed plan re-scanned and
-    // re-shingled the full corpus once per consumer (4 scans, ExecPlan).
+    // re-shingled the full corpus once per consumer (4 parquet scans in
+    // the executed plan; now `graft.tools.Profile ... executed`).
     val ids = pairs
       .select(explode(array(col("id_a"), col("id_b"))).as("__id"))
       .distinct()
@@ -662,7 +664,7 @@ object Dedup {
 
   def readEmbeddingIndex(spark: org.apache.spark.sql.SparkSession,
                          path: String): EmbeddingIndex = {
-    val root = readIndexMeta(spark, path)
+    val root = graft.sink.IndexLayout.readMeta(spark, path)
     EmbeddingIndex(spark.read.parquet(s"$path/planes"),
       spark.read.parquet(s"$path/signatures"),
       metaInt(root, "num_planes"), metaInt(root, "band_bits"),
@@ -744,7 +746,7 @@ object Dedup {
       maxEpochExclusive: Option[Long]): DataFrame = {
     import graft.functions.VectorOps
     val spark = newEmb.sparkSession
-    val root = readIndexMeta(spark, path)
+    val root = graft.sink.IndexLayout.readMeta(spark, path)
     val numPlanes = metaInt(root, "num_planes")
     val bandBits = metaInt(root, "band_bits")
     val planes = spark.read.parquet(s"$path/planes")
@@ -1359,12 +1361,11 @@ object Dedup {
                               idCol: String, textCol: String,
                               maxPoints: Int = DefaultMaxProbePoints,
                               maxEpochExclusive: Option[Long] = None,
-                              maxGramPostings: Int = Int.MaxValue,
-                              useGramCounts: Boolean = true)
+                              maxGramPostings: Int = Int.MaxValue)
       : DataFrame = {
     import graft.sink.IndexLayout
     val spark = newDocs.sparkSession
-    val root = readIndexMeta(spark, path)
+    val root = IndexLayout.readMeta(spark, path)
     val k = metaInt(root, "shingle_k")
     val nsets = hashedShingleSets(newDocs, idCol, textCol, k)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -1388,13 +1389,10 @@ object Dedup {
       metaSchemaOpt(root, "schema_prefix"))
     // the guard's count sidecar, gated EXACTLY like the prefix view
     // (same epoch listing, same manifest point-pruning on g) — counts
-    // match the postings the candidate join will actually see.
-    // `useGramCounts=false` forces the recount branch over the SAME
-    // layout views — the measurement knob tools/ProbeJaccardAB uses
-    // to isolate the statistics source from everything else
+    // match the postings the candidate join will actually see. A
+    // layout without the sidecar takes the recount branch.
     val gcounts =
-      if (useGramCounts &&
-          IndexLayout.hasTable(root, IndexLayout.JaccardGramCounts))
+      if (IndexLayout.hasTable(root, IndexLayout.JaccardGramCounts))
         Some(IndexLayout.readPostings(spark, path, root, gs,
           maxEpochExclusive, IndexLayout.JaccardGramCounts,
           metaSchemaOpt(root, "schema_gcounts")))
@@ -1428,7 +1426,7 @@ object Dedup {
   def readJaccardIndex(spark: org.apache.spark.sql.SparkSession,
                        path: String): JaccardIndex =  {
     import graft.sink.IndexLayout
-    val root = readIndexMeta(spark, path)
+    val root = IndexLayout.readMeta(spark, path)
     // resolve through the meta so a STREAM-MAINTAINED layout reads
     // whole (frozen dfreq base; prefix/sets base + epoch tail); a
     // batch-published layout resolves to the plain dirs unchanged
@@ -1819,7 +1817,7 @@ object Dedup {
   def readSignatureIndex(spark: org.apache.spark.sql.SparkSession,
                          path: String): SignatureIndex = {
     import org.json4s._
-    val root = readIndexMeta(spark, path)
+    val root = graft.sink.IndexLayout.readMeta(spark, path)
     // shingle_k added mid-r13; pre-existing sidecars carry the default
     val shingleK = (root \ "shingle_k") match {
       case JNothing => 3
@@ -1843,34 +1841,6 @@ object Dedup {
     val out = fs.create(
       new org.apache.hadoop.fs.Path(path, "_index_meta.json"), true)
     try out.write(json.getBytes("UTF-8")) finally out.close()
-  }
-
-  private[graft] def readIndexMeta(spark: org.apache.spark.sql.SparkSession,
-                            path: String): org.json4s.JValue = {
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def slurp(p: org.apache.hadoop.fs.Path): String = {
-      val in = fs.open(p)
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    }
-    // fall back to the promotion staging file when the primary is
-    // missing: a streaming maintainer promotes the sidecar via
-    // write-.next + delete + rename, so a concurrent reader (or a
-    // reader after a crash inside that window) sees no primary for a
-    // moment — `.next` then holds the NEWER meta, whose Bloom is a
-    // superset of the published signatures (the safe direction; false
-    // positives only)
-    val primary = new org.apache.hadoop.fs.Path(path, "_index_meta.json")
-    val json =
-      try slurp(primary)
-      catch { case e: java.io.FileNotFoundException =>
-        val next =
-          new org.apache.hadoop.fs.Path(path, "_index_meta.json.next")
-        try slurp(next) catch { case _: java.io.FileNotFoundException =>
-          throw e }
-      }
-    org.json4s.jackson.JsonMethods.parse(json)
   }
 
   private[graft] def bitsToString(bits: Array[Long]): String =
@@ -2094,7 +2064,7 @@ object Dedup {
                                           None)
       : DataFrame = {
     val spark = newDocs.sparkSession
-    val root = readIndexMeta(spark, path)
+    val root = graft.sink.IndexLayout.readMeta(spark, path)
     val nh = metaInt(root, "num_hashes")
     val rpb = metaInt(root, "rows_per_band")
     val kk = metaInt(root, "shingle_k")

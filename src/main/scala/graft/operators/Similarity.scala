@@ -603,7 +603,7 @@ object Similarity {
     */
   def readHierarchyIndex(spark: org.apache.spark.sql.SparkSession,
                          path: String): HierarchyIndex = {
-    val root = Dedup.readIndexMeta(spark, path)
+    val root = graft.sink.IndexLayout.readMeta(spark, path)
     val idCol = Dedup.metaStr(root, "id_col")
     val vecCol = Dedup.metaStr(root, "vec_col")
     val assigned = spark.read.parquet(s"$path/assigned")
@@ -655,7 +655,7 @@ object Similarity {
                                    maxClusters: Int = 4096): DataFrame = {
     val spark = batch.sparkSession
     val index = readHierarchyIndex(spark, path)
-    val root = Dedup.readIndexMeta(spark, path)
+    val root = graft.sink.IndexLayout.readMeta(spark, path)
     val (mid, mvec) =
       (Dedup.metaStr(root, "id_col"), Dedup.metaStr(root, "vec_col"))
     require(mid == idCol && mvec == vecCol,

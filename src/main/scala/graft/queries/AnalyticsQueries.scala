@@ -1271,8 +1271,9 @@ object AnalyticsQueries {
         // is F, so every same-order l2/l3 row survives with it. The
         // rollup persists because BOTH the order-level stats and the
         // spine consume it and AQE's runtime stage reuse does not fire
-        // across the two consumers (ExecPlan without the persist: two
-        // full lineitem scans).
+        // across the two consumers (without the persist the executed
+        // plan ran two full lineitem scans; `graft.tools.Profile ...
+        // executed` counts them).
         val perOS = li
           .join(statsBroadcast(s, d, ordF, Seq("orders")),
             col("l_orderkey") === col("o_orderkey"))

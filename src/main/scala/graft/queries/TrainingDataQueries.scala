@@ -4264,7 +4264,7 @@ object TrainingDataQueries {
             threshold = MinhashThreshold)
           q.awaitTermination(300000); q.stop()
         }
-        val root = Dedup.readIndexMeta(s, idx)
+        val root = graft.sink.IndexLayout.readMeta(s, idx)
         require(Dedup.metaStrOpt(root, "postings_dir")
             .contains("postings_v2"),
           s"epoch 2's boundary must have folded the tail into a fresh " +
@@ -4315,7 +4315,7 @@ object TrainingDataQueries {
             shards = 16, compactEvery = 2, threshold = EmbThreshold)
           q.awaitTermination(300000); q.stop()
         }
-        val root = Dedup.readIndexMeta(s, idx)
+        val root = graft.sink.IndexLayout.readMeta(s, idx)
         require(Dedup.metaStrOpt(root, "postings_dir")
             .contains("postings_v2"),
           s"epoch 2's boundary must have folded both tables, meta " +
@@ -4573,7 +4573,7 @@ object TrainingDataQueries {
             driftThreshold = -10.0)
           q.awaitTermination(300000); q.stop()
         }
-        val root = Dedup.readIndexMeta(s, idx)
+        val root = graft.sink.IndexLayout.readMeta(s, idx)
         require(Dedup.metaStrOpt(root, "centroids_dir")
             .contains("centroids_v2"),
           s"epoch 2's boundary must have swapped in a rebuilt tree, " +

@@ -147,4 +147,46 @@ object DirCommit {
     drop(f, stage) // the commit point
     f.delete(old, true)
   }
+
+  // ---- small files (an index layout's meta, a slot's confirmed-flush
+  // LSN): replaced whole, read by a reader that may run inside the
+  // replace ---------------------------------------------------------
+
+  /** The staged copy of `p` that [[writeFile]] renames into place. */
+  def stagedFile(p: Path): Path = new Path(p.getParent, s".${p.getName}.tmp")
+
+  /** Replace the small file `p` with `text`: write and close the staged
+    * copy, delete `p`, rename. Hadoop's rename does not overwrite on
+    * every filesystem, hence the delete. A kill before the delete keeps
+    * the old file; a kill between the delete and the rename leaves only
+    * the complete staged copy, which [[readFile]] reads and
+    * [[recoverFile]] promotes.
+    */
+  def writeFile(fs: FileSystem, p: Path, text: String): Unit = {
+    val staged = stagedFile(p)
+    val out = fs.create(staged, true)
+    try out.write(text.getBytes("UTF-8")) finally out.close()
+    fs.delete(p, false)
+    move(fs, staged, p)
+  }
+
+  /** The text of `p`, or of its staged copy while `p` is missing (the
+    * delete-rename window of [[writeFile]]); None when neither exists.
+    */
+  def readFile(fs: FileSystem, p: Path): Option[String] = {
+    def slurp(q: Path): Option[String] =
+      try {
+        val in = fs.open(q)
+        try Some(scala.io.Source.fromInputStream(in, "UTF-8").mkString)
+        finally in.close()
+      } catch { case _: java.io.FileNotFoundException => None }
+    // `p` again last: the window may close between the first two reads
+    slurp(p).orElse(slurp(stagedFile(p))).orElse(slurp(p))
+  }
+
+  /** Finish a [[writeFile]] killed between its delete and its rename. */
+  def recoverFile(fs: FileSystem, p: Path): Unit = {
+    val staged = stagedFile(p)
+    if (!fs.exists(p) && fs.exists(staged)) move(fs, staged, p)
+  }
 }

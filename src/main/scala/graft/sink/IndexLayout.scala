@@ -19,9 +19,8 @@ import org.json4s.JValue
   *
   * Readers resolve everything through the meta, so every maintenance
   * step is crash-ordered by a single meta promotion
-  * ([[promoteMeta]] / [[recoverMeta]], the write-`.next` + delete +
-  * rename protocol shared with the flat streaming maintainer; readers
-  * additionally fall back to `.next` inside the window). A layout
+  * ([[promoteMeta]] / [[recoverMeta]] / [[readMeta]], over
+  * [[DirCommit.writeFile]]'s staged small-file replace). A layout
   * written by the batch publishers (no epoch state in the meta) reads
   * identically: the resolution fields default to the batch shape.
   *
@@ -58,29 +57,28 @@ object IndexLayout {
     JsonMethods.compact(JsonMethods.render(obj))
   }
 
-  /** Atomic-enough meta promotion: write `.next`, delete the primary,
-    * rename. [[recoverMeta]] heals the delete/rename window at the
-    * next writer entry; readers fall back to `.next` inside it
-    * (`Dedup.readIndexMeta`).
+  /** Replace the layout's meta ([[DirCommit.writeFile]]). Readers
+    * ([[readMeta]]) see the old meta or the new one; a writer entering
+    * after a kill inside the replace runs [[recoverMeta]] first.
     */
-  def promoteMeta(fs: FileSystem, path: String, json: String): Unit = {
-    val tmp = new Path(path, MetaFile + ".next")
-    val out = fs.create(tmp, true)
-    try out.write(json.getBytes("UTF-8")) finally out.close()
-    val dst = new Path(path, MetaFile)
-    if (fs.exists(dst)) fs.delete(dst, false)
-    if (!fs.rename(tmp, dst))
-      throw new java.io.IOException(
-        s"index layout: could not promote $tmp to $dst")
-  }
+  def promoteMeta(fs: FileSystem, path: String, json: String): Unit =
+    DirCommit.writeFile(fs, new Path(path, MetaFile), json)
 
-  /** Heal a crash inside [[promoteMeta]]'s delete/rename window. */
-  def recoverMeta(fs: FileSystem, path: String): Unit = {
-    val dst = new Path(path, MetaFile)
-    val tmp = new Path(path, MetaFile + ".next")
-    if (!fs.exists(dst) && fs.exists(tmp) && !fs.rename(tmp, dst))
-      throw new java.io.IOException(
-        s"index layout: could not recover $dst from $tmp")
+  /** Finish a [[promoteMeta]] killed between its delete and rename. */
+  def recoverMeta(fs: FileSystem, path: String): Unit =
+    DirCommit.recoverFile(fs, new Path(path, MetaFile))
+
+  /** The layout's meta, from its staged copy while a [[promoteMeta]] is
+    * between its delete and rename: the staged meta is the NEWER one,
+    * whose Bloom is a superset of the published signatures (the safe
+    * direction; false positives only).
+    */
+  def readMeta(spark: SparkSession, path: String): JValue = {
+    val meta = new Path(path, MetaFile)
+    val json = DirCommit.readFile(DirCommit.fs(spark, path), meta)
+      .getOrElse(throw new java.io.FileNotFoundException(
+        s"index layout: no $meta"))
+    org.json4s.jackson.JsonMethods.parse(json)
   }
 
   // ---- meta resolution fields (absent on batch-published layouts:
@@ -179,7 +177,7 @@ object IndexLayout {
   /** The epoch committed with the layout's meta, if it has one. */
   def lastApplied(spark: SparkSession, path: String): Option[Long] =
     if (!DirCommit.fs(spark, path).exists(new Path(path, MetaFile))) None
-    else Some(lastEpoch(graft.operators.Dedup.readIndexMeta(spark, path)))
+    else Some(lastEpoch(readMeta(spark, path)))
 
   /** The postings view of a layout: the manifest-pruned base shards
     * (or the full base when `points` is None — the over-cap fallback)

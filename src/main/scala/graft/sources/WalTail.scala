@@ -68,52 +68,22 @@ object WalTail {
   def defaultSlotFile(logDir: String): String =
     s"$logDir/_slot/confirmed_flush_lsn"
 
-  /** The persisted confirmed-flush LSN. Prefers the slot file; when it
-    * is MISSING, falls back to the staged `.tmp` — [[writeFeedback]]'s
-    * delete-then-rename has a crash window where only the fully-written
-    * tmp exists (the tmp is closed before the old file is deleted, so
-    * in that state it always holds the complete new LSN). Without the
-    * fallback a checkpoint-free restart in that window would silently
-    * resume from `startLsn` and replay every retained segment.
+  /** The persisted confirmed-flush LSN. Inside [[writeFeedback]]'s
+    * delete-rename window the staged copy holds the complete new LSN
+    * ([[graft.sink.DirCommit.readFile]]); without that fallback a
+    * checkpoint-free restart in the window would resume from
+    * `startLsn` and replay every retained segment.
     */
-  def readFeedback(fs: FileSystem, slotFile: String): Option[Long] = {
-    val p = new Path(slotFile)
-    def readLsn(path: Path): Option[Long] = {
-      val in = fs.open(path)
-      try {
-        val s = scala.io.Source.fromInputStream(in, "UTF-8")
-          .mkString.trim
-        if (s.isEmpty) None else Some(s.toLong)
-      } finally in.close()
-    }
-    if (fs.exists(p)) readLsn(p)
-    else {
-      val tmp = new Path(p.getParent, s".${p.getName}.tmp")
-      if (fs.exists(tmp)) readLsn(tmp) else None
-    }
-  }
+  def readFeedback(fs: FileSystem, slotFile: String): Option[Long] =
+    graft.sink.DirCommit.readFile(fs, new Path(slotFile))
+      .map(_.trim).filter(_.nonEmpty).map(_.toLong)
 
-  /** Persist the confirmed-flush LSN via stage + rename. A crash
-    * mid-STAGE leaves the previous feedback intact (the tmp is written
-    * and closed before the old file is touched); a crash between the
-    * delete and the rename leaves only the tmp, which
-    * [[readFeedback]]'s fallback recovers — never a torn or silently
-    * regressed LSN. (Hadoop's `rename` does not overwrite on every
-    * filesystem, hence delete-then-rename rather than a plain
-    * overwrite-rename.)
+  /** Persist the confirmed-flush LSN with
+    * [[graft.sink.DirCommit.writeFile]]: a kill leaves the previous LSN
+    * or the new one, never a torn or silently regressed LSN.
     */
-  def writeFeedback(fs: FileSystem, slotFile: String, lsn: Long): Unit = {
-    val p = new Path(slotFile)
-    fs.mkdirs(p.getParent)
-    val tmp = new Path(p.getParent, s".${p.getName}.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(lsn.toString.getBytes("UTF-8"))
-    finally out.close()
-    if (fs.exists(p)) fs.delete(p, false)
-    if (!fs.rename(tmp, p))
-      throw new java.io.IOException(
-        s"wal-tail: could not publish feedback $tmp as $p")
-  }
+  def writeFeedback(fs: FileSystem, slotFile: String, lsn: Long): Unit =
+    graft.sink.DirCommit.writeFile(fs, new Path(slotFile), lsn.toString)
 
   private[sources] def parseLsn(line: String): Long = {
     val i = line.indexOf('\t')

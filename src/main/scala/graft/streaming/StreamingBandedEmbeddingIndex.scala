@@ -93,7 +93,7 @@ object StreamingBandedEmbeddingIndex {
       return
     }
 
-    val root = Dedup.readIndexMeta(spark, indexPath)
+    val root = IndexLayout.readMeta(spark, indexPath)
     val (snp, sbb) = (Dedup.metaInt(root, "num_planes"),
       Dedup.metaInt(root, "band_bits"))
     require(numPlanes == snp && bandBits == sbb,
@@ -162,14 +162,14 @@ object StreamingBandedEmbeddingIndex {
     //    CURRENT pointers, and the vectors compact then carries the
     //    postings' NEW ones.
     if (batchId - through >= compactEvery) {
-      val root2 = Dedup.readIndexMeta(spark, indexPath)
+      val root2 = IndexLayout.readMeta(spark, indexPath)
       IndexLayout.compact(spark, indexPath, root2, "bh", shards,
         upTo = batchId, metaFields = paramFields(batchId) ++ Seq(
           "vectors_dir" ->
             IndexLayout.baseDir(root2, IndexLayout.Vectors),
           "vectors_compacted_through" ->
             IndexLayout.compactedThrough(root2, IndexLayout.Vectors)))
-      val root3 = Dedup.readIndexMeta(spark, indexPath)
+      val root3 = IndexLayout.readMeta(spark, indexPath)
       IndexLayout.compact(spark, indexPath, root3, "id", shards,
         upTo = batchId, metaFields = paramFields(batchId) ++ Seq(
           "postings_dir" -> IndexLayout.baseDir(root3),

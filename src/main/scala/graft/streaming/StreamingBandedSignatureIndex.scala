@@ -101,7 +101,7 @@ object StreamingBandedSignatureIndex {
       return
     }
 
-    val root = Dedup.readIndexMeta(spark, indexPath)
+    val root = IndexLayout.readMeta(spark, indexPath)
     val (skk, snh, srpb) = (Dedup.metaInt(root, "shingle_k"),
       Dedup.metaInt(root, "num_hashes"),
       Dedup.metaInt(root, "rows_per_band"))
@@ -143,7 +143,7 @@ object StreamingBandedSignatureIndex {
     //    (bounded probe overhead: the tail never exceeds compactEvery
     //    batches)
     if (batchId - through >= compactEvery) {
-      val newRoot = Dedup.readIndexMeta(spark, indexPath)
+      val newRoot = IndexLayout.readMeta(spark, indexPath)
       IndexLayout.compact(spark, indexPath, newRoot, "bh", shards,
         upTo = batchId, metaFields = paramFields(batchId))
     }

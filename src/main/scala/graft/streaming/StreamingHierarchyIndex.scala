@@ -206,7 +206,7 @@ object StreamingHierarchyIndex {
       return
     }
 
-    val root = Dedup.readIndexMeta(spark, indexPath)
+    val root = IndexLayout.readMeta(spark, indexPath)
     val (mk1, mk2) =
       (Dedup.metaInt(root, "k1"), Dedup.metaInt(root, "k2"))
     val mtarget = Dedup.metaInt(root, "target_cluster_size")
@@ -266,7 +266,7 @@ object StreamingHierarchyIndex {
     //    unknowable history). Reads the layout, not the cached
     //    assignment.
     if (batchId - through >= compactEvery) {
-      val root2 = Dedup.readIndexMeta(spark, indexPath)
+      val root2 = IndexLayout.readMeta(spark, indexPath)
       rebuildIfDrifted(spark, indexPath, root2, idCol, vecCol,
           targetClusterSize, shards, batchId, driftThreshold) match {
         case None => // rebuilt — the swap already folded the tail
@@ -360,7 +360,7 @@ object StreamingHierarchyIndex {
   private def cleanupSeedGens(spark: SparkSession,
                               indexPath: String): Unit = {
     val f = DirCommit.fs(spark, indexPath)
-    val root = Dedup.readIndexMeta(spark, indexPath)
+    val root = IndexLayout.readMeta(spark, indexPath)
     // a live grace window (meta carries retired_dirs) keeps the
     // superseded seed generation; once a compaction boundary promotes
     // a meta without the fields, the same call collects it
@@ -452,7 +452,7 @@ object StreamingHierarchyIndex {
             vecCol: String, threshold: Double,
             maxClusters: Int = 4096): DataFrame = {
     val spark = batch.sparkSession
-    val root = Dedup.readIndexMeta(spark, indexPath)
+    val root = IndexLayout.readMeta(spark, indexPath)
     val (mid, mvec) =
       (Dedup.metaStr(root, "id_col"), Dedup.metaStr(root, "vec_col"))
     require(mid == idCol && mvec == vecCol,

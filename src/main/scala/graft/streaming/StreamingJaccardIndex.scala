@@ -138,7 +138,7 @@ object StreamingJaccardIndex {
       return
     }
 
-    val root = Dedup.readIndexMeta(spark, indexPath)
+    val root = IndexLayout.readMeta(spark, indexPath)
     val (skk, st, ssh) = (Dedup.metaInt(root, "shingle_k"),
       Dedup.metaDouble(root, "threshold"),
       Dedup.metaInt(root, "shards"))
@@ -251,7 +251,7 @@ object StreamingJaccardIndex {
 
     // 3) compaction: re-freeze the order from the accumulated sets
     if (batchId - through >= compactEvery) {
-      val root2 = Dedup.readIndexMeta(spark, indexPath)
+      val root2 = IndexLayout.readMeta(spark, indexPath)
       publishFrozen(
         IndexLayout.readPostings(spark, indexPath, root2, None,
           Some(batchId + 1), IndexLayout.JaccardSets),

@@ -37,10 +37,11 @@ import graft.operators.Dedup
   * replay detects (`last_epoch >= batchId` but no epoch dir) and
   * repairs idempotently: the probe filters `epoch < batchId`, the OR
   * is idempotent, the rename is skipped if present. Meta promotion
-  * itself is write-tmp + delete + rename with a startup recovery for
-  * the delete/rename window — and readers ([[Dedup.readIndexMeta]])
-  * fall back to the `.next` staging file inside that window, so a
-  * concurrent probe never sees a missing sidecar.
+  * itself is [[graft.sink.DirCommit.writeFile]]'s staged replace with a
+  * startup recovery for its delete/rename window — and readers
+  * ([[graft.sink.IndexLayout.readMeta]]) fall back to the staged copy
+  * inside that window, so a concurrent probe never sees a missing
+  * sidecar.
   *
   * Layout parameters (shingle k, hash count, banding, Bloom family)
   * are written at bootstrap, READ BACK from the sidecar on every
@@ -94,7 +95,7 @@ object StreamingSignatureIndex {
       if (!fs.exists(metaPath))
         (Array.fill(bloomM)(0L), k, numHashes, rowsPerBand, bloomK, -1L)
       else {
-        val root = Dedup.readIndexMeta(spark, indexPath)
+        val root = graft.sink.IndexLayout.readMeta(spark, indexPath)
         val (bits, bkk) = Dedup.metaBloom(root)
         val skk = Dedup.metaInt(root, "shingle_k")
         val snh = Dedup.metaInt(root, "num_hashes")

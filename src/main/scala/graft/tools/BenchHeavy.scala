@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Spot-bench an arbitrary subset of the registry queries against an
   * arbitrary fixture dir — the [[graft.Bench]] measurement protocol
   * (cold pass excluded, per-query medians, contention detection)
@@ -24,26 +22,17 @@ object BenchHeavy {
     val unknown = names.filterNot(graft.SparkEntry.queries.contains)
     require(unknown.isEmpty, s"unknown query name(s): " +
       unknown.mkString(", "))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // A/B knob for the forced-vs-adaptive comparison: a huge threshold
     // makes the planner broadcast the SF-scaling join sides the r14
     // hint audit stopped hinting — approximating the pre-audit plans
     // so their scale behavior can be measured instead of argued
     val autoBroadcast =
       sys.env.getOrElse("SPARK_GRAFT_AUTOBROADCAST", "10485760")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench-heavy")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.autoBroadcastJoinThreshold", autoBroadcast)
-      .config("spark.sql.adaptive.autoBroadcastJoinThreshold",
-        autoBroadcast)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.start(
+      graft.Sessions.builder().appName("graft-bench-heavy"))
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", autoBroadcast)
+    spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold",
+      autoBroadcast)
     val (json, summary, failed) = graft.Bench.run(spark, sfDir, iters,
       names, graft.SparkEntry.queries)
     println(json)

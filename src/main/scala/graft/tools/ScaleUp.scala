@@ -62,16 +62,8 @@ object ScaleUp {
       "usage: ScaleUp <srcSfDir> <dstDir> <factor> [suffix|salt]")
     val (src, dst, factor) = (args(0), args(1), args(2).toInt)
     val docMode = if (args.length > 3) args(3) else "suffix"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-scaleup")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.start(
+      graft.Sessions.builder().appName("graft-scaleup"))
     run(spark, src, dst, factor, docMode)
     println(s"[scaleup] wrote factor-$factor fixture to $dst " +
       s"(docMode=$docMode, lineitem rows: " +

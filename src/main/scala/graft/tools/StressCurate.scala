@@ -124,14 +124,9 @@ object StressCurate {
     // 0 = exact buckets (the oracle-parity default); >0 caps each LSH
     // band bucket, starring viral clusters instead of squaring them
     val maxBucket = if (args.length > 2) args(2).toInt else 0
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "64")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.start()
+    // the soak's recorded shapes were measured at 64 shuffle partitions
+    spark.conf.set("spark.sql.shuffle.partitions", "64")
     import graft.operators.{Dedup, Sampling, TextAnalysis}
 
     val corpusPath = s"$workDir/documents.parquet"

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.operators.Dedup
@@ -41,13 +40,7 @@ object StressHierRebuild {
     val compactEvery = if (args.length > 3) args(3).toInt else 3
     val driftFrom = if (args.length > 4) args(4).toInt else 4
 
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.start()
 
     def timed(f: => Unit): Double = {
       val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
@@ -88,7 +81,7 @@ object StressHierRebuild {
     val pairs = s"$workDir/hier-pairs"
     val fsys = DirCommit.fs(spark, idx)
     def baseFiles(): (String, Int, Long) = {
-      val root = Dedup.readIndexMeta(spark, idx)
+      val root = IndexLayout.readMeta(spark, idx)
       val base = IndexLayout.baseDir(root, IndexLayout.HierarchyAssigned)
       val p = new org.apache.hadoop.fs.Path(s"$idx/$base")
       val n =
@@ -110,7 +103,7 @@ object StressHierRebuild {
         maxClusters = 4096, driftThreshold = 0.05))
       val p = timed(graft.streaming.StreamingHierarchyIndex
         .probe(probeBatch, idx, "vec_id", "embedding", 0.9).count())
-      val root = Dedup.readIndexMeta(spark, idx)
+      val root = IndexLayout.readMeta(spark, idx)
       val gen = Dedup.metaStrOpt(root, "centroids_dir")
         .getOrElse("centroids")
       val retired = Dedup.metaStrOpt(root, "retired_dirs").getOrElse("")

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.operators.Similarity
@@ -27,13 +26,7 @@ object StressIvf {
     val nprobe = 8
     val topK = 10
     val nQueries = 64L
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.start()
 
     // StressKmeans' deterministic blob corpus: vector i leans toward
     // direction (i % nBlobs) plus hash-noise — column expressions only

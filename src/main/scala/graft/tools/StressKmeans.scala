@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev-only scale stress for Similarity.kmeansTrainExact: N synthetic
@@ -21,13 +20,7 @@ object StressKmeans {
     val k = if (args.length > 1) args(1).toInt else 200
     val dim = 64
     val nBlobs = 32
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.start()
 
     // deterministic synthetic corpus: vector i leans toward direction
     // (i % nBlobs) with hash-noise — pure column expressions, nothing

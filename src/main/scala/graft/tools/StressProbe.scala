@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.operators.Dedup
@@ -29,14 +28,9 @@ object StressProbe {
     // lowmatch | mirror
     val only = if (args.length > 2) args(2) else "all"
     def want(f: String): Boolean = only == "all" || only == f
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "64")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.start()
+    // the soak's recorded shapes were measured at 64 shuffle partitions
+    spark.conf.set("spark.sql.shuffle.partitions", "64")
 
     val total = nDocs + nDocs / 20
     val allPath = s"$workDir/documents_all.parquet"

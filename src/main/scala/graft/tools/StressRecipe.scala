@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Curation, Decontamination, Dedup, Sampling,
@@ -35,14 +35,9 @@ object StressRecipe {
   def main(args: Array[String]): Unit = {
     val nDocs = if (args.length > 0) args(0).toLong else 5000000L
     val workDir = if (args.length > 1) args(1) else "/tmp/graft-recipe-soak"
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "64")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.start()
+    // the soak's recorded shapes were measured at 64 shuffle partitions
+    spark.conf.set("spark.sql.shuffle.partitions", "64")
 
     val corpusPath = s"$workDir/documents.parquet"
     if (!new java.io.File(corpusPath).exists()) {

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Throughput probe for the WalTail replication-slot source
   * ([[graft.sources.WalTail]]): synthesize a wal2json segment
   * directory, drain it through the full slot -> decode -> partitioned
@@ -34,13 +32,7 @@ object StressWalTail {
     val flush = if (args.length > 4) args(4) else "merge"
     val keyspace = if (args.length > 5) args(5).toLong
       else (if (args.length > 1) args(1).toLong else 20000L) / 2
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.start()
 
     val logDir = s"$workDir/wal"
     val tablePath = s"$workDir/table"

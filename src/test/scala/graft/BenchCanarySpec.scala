@@ -45,11 +45,18 @@ class BenchCanarySpec extends SparkSpecBase {
     val JDouble(wall) = parsed \ "queries" \ "ok"
     val JDouble(norm) = parsed \ "queries_canary_units" \ "ok"
     val JDouble(mt1) = passes(1) \ "mt_sec"
-    // tolerance = worst-case JSON rounding: wall and norm are each
-    // rounded to 3 decimals independently, so recomputing wall/mt1 from
-    // the rounded wall is off by up to 0.0005/mt1 (on a FAST host band
-    // mt1 is small and that term alone exceeded the old fixed 0.002)
-    assert(math.abs(norm - wall / mt1) <= 0.0005 / mt1 + 0.0005 + 1e-9,
+    // tolerance = worst-case JSON rounding. norm is w/m (unrounded wall
+    // and mt) rounded to 3 decimals, so it is within h = 0.0005 of w/m;
+    // the artifact's wall is w rounded to 3 decimals (within h) and mt1
+    // is m rounded to 4 (within k = 0.00005). Hence
+    //   |norm - wall/mt1| <= h + |w/m - wall/mt1|
+    // and the second term peaks at w = wall + h, m = mt1 - k:
+    //   h/(mt1 - k) + wall*k/(mt1*(mt1 - k)),
+    // the wall rounding plus mt1's own rounding (~ norm*k/mt1). Both
+    // grow as mt1 shrinks, so a FAST host band needs them most.
+    val (h, k) = (0.0005, 0.00005)
+    assert(math.abs(norm - wall / mt1) <=
+      h + h / (mt1 - k) + wall * k / (mt1 * (mt1 - k)) + 1e-9,
       s"norm=$norm wall=$wall mt=$mt1")
     // the per-query methodology annotations ride the full artifact
     assert(json.contains("\"methodology_notes\":{\"cdc_slot_drain\""), "notes")

@@ -36,8 +36,7 @@ class WalTailUnitSpec extends SparkSpecBase {
     // simulate writeFeedback crashing between its delete and rename:
     // the NEW lsn is fully staged, the slot file is gone
     val p = new org.apache.hadoop.fs.Path(slot)
-    val tmp = new org.apache.hadoop.fs.Path(p.getParent,
-      s".${p.getName}.tmp")
+    val tmp = graft.sink.DirCommit.stagedFile(p)
     val out = fs.create(tmp, true)
     out.write("9".getBytes("UTF-8")); out.close()
     fs.delete(p, false)
@@ -57,8 +56,7 @@ class WalTailUnitSpec extends SparkSpecBase {
     val slot = WalTail.defaultSlotFile(dir)
     WalTail.writeFeedback(fs, slot, 5L)
     val p = new org.apache.hadoop.fs.Path(slot)
-    val tmp = new org.apache.hadoop.fs.Path(p.getParent,
-      s".${p.getName}.tmp")
+    val tmp = graft.sink.DirCommit.stagedFile(p)
     val out = fs.create(tmp, true)
     out.write("8".getBytes("UTF-8")); out.close()
     // crash BEFORE the delete: both files exist; resuming from the

@@ -108,7 +108,7 @@ class StreamingBandedEmbeddingIndexSpec extends SparkSpecBase {
     // answers
     b3.coalesce(1).write.parquet(s"$srcDir/f3")
     run()
-    val root = Dedup.readIndexMeta(spark, idxDir)
+    val root = IndexLayout.readMeta(spark, idxDir)
     assert(IndexLayout.baseDir(root) == "postings_v2")
     assert(IndexLayout.baseDir(root, IndexLayout.Vectors) ==
       "vectors_v2")

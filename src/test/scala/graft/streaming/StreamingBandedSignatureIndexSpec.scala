@@ -102,7 +102,7 @@ class StreamingBandedSignatureIndexSpec extends SparkSpecBase {
       schema, idxDir, pairsDir, ckpt, "doc_id", "text",
       compactEvery = 2)
     q3.processAllAvailable(); q3.stop()
-    val root3 = Dedup.readIndexMeta(spark, idxDir)
+    val root3 = IndexLayout.readMeta(spark, idxDir)
     assert(IndexLayout.postingsDir(root3) == "postings_v2",
       "compaction must re-point the base")
     assert(IndexLayout.compactedThrough(root3) == 2L)

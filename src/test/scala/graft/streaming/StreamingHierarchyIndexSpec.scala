@@ -84,7 +84,7 @@ class StreamingHierarchyIndexSpec extends SparkSpecBase {
     run()
     assert(graft.sink.IndexLayout.lastApplied(spark, idxDir)
       .contains(0L))
-    val root0 = Dedup.readIndexMeta(spark, idxDir)
+    val root0 = IndexLayout.readMeta(spark, idxDir)
     assert(Dedup.metaInt(root0, "k1") == 2 &&
       Dedup.metaInt(root0, "k2") == 2,
       "bootstrap must size the tree from the first batch")
@@ -113,7 +113,7 @@ class StreamingHierarchyIndexSpec extends SparkSpecBase {
     // answers; seeds must be untouched (frozen)
     b3.coalesce(1).write.parquet(s"$srcDir/f3")
     run()
-    val root2 = Dedup.readIndexMeta(spark, idxDir)
+    val root2 = IndexLayout.readMeta(spark, idxDir)
     assert(IndexLayout.baseDir(root2,
       IndexLayout.HierarchyAssigned) == "assigned_v2")
     assert(IndexLayout.compactedThrough(root2,
@@ -187,7 +187,7 @@ class StreamingHierarchyIndexSpec extends SparkSpecBase {
       (s"$dir/in", s"$dir/idx", s"$dir/pairs", s"$dir/ckpt")
     new java.io.File(srcDir).mkdirs()
     val fs = DirCommit.fs(spark, idxDir)
-    def meta() = Dedup.readIndexMeta(spark, idxDir)
+    def meta() = IndexLayout.readMeta(spark, idxDir)
     def metaStr(n: String) = Dedup.metaStr(meta(), n)
     def run(): Unit = {
       val q = StreamingHierarchyIndex.start(spark, s"$srcDir/*",

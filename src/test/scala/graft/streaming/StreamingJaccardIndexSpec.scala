@@ -103,7 +103,7 @@ class StreamingJaccardIndexSpec extends SparkSpecBase {
     // epoch 2: compaction re-freezes all three tables
     b3.toDF("doc_id", "text").coalesce(1).write.parquet(s"$srcDir/f3")
     run()
-    val root = Dedup.readIndexMeta(spark, idxDir)
+    val root = IndexLayout.readMeta(spark, idxDir)
     assert(IndexLayout.baseDir(root, IndexLayout.JaccardSets) ==
       "sets_v2")
     assert(IndexLayout.baseDir(root, IndexLayout.JaccardPrefix) ==
@@ -184,7 +184,7 @@ class StreamingJaccardIndexSpec extends SparkSpecBase {
     apply(b1, 0L); apply(b2, 1L)
 
     // 1) the folded sidecar equals an exact recount of the prefix view
-    val root = Dedup.readIndexMeta(spark, idxDir)
+    val root = IndexLayout.readMeta(spark, idxDir)
     assert(IndexLayout.hasTable(root, IndexLayout.JaccardGramCounts))
     def rows(df: DataFrame) = df.select(col("g"), col("n"), col("hub"))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
@@ -241,7 +241,7 @@ class StreamingJaccardIndexSpec extends SparkSpecBase {
     assert(!f.exists(new org.apache.hadoop.fs.Path(
       s"$idxDir/gcounts_epochs/epoch=2")),
       "a pre-sidecar layout must not gain counts epochs mid-life")
-    val root2 = Dedup.readIndexMeta(spark, idxDir)
+    val root2 = IndexLayout.readMeta(spark, idxDir)
     assert(!IndexLayout.hasTable(root2, IndexLayout.JaccardGramCounts))
     val guardedFallback = pairSet(Dedup.ngramJaccardAgainstPath(probe,
       idxDir, "doc_id", "text", maxGramPostings = 2))
@@ -252,7 +252,7 @@ class StreamingJaccardIndexSpec extends SparkSpecBase {
     val b4 = Seq((201L, s"$phrase common tail 201"))
       .toDF("doc_id", "text")
     apply(b4, 3L, compactEvery = 1)
-    val root3 = Dedup.readIndexMeta(spark, idxDir)
+    val root3 = IndexLayout.readMeta(spark, idxDir)
     assert(IndexLayout.hasTable(root3, IndexLayout.JaccardGramCounts),
       "compaction must upgrade the layout with the counts table")
     assert(IndexLayout.baseDir(root3, IndexLayout.JaccardGramCounts)
@@ -291,7 +291,7 @@ class StreamingJaccardIndexSpec extends SparkSpecBase {
     // strip to the r15 shape: pos-less prefix base, no gcounts, no
     // recorded schemas (pre-r16 metas carried none)
     val f = DirCommit.fs(spark, idxDir)
-    val root0 = Dedup.readIndexMeta(spark, idxDir)
+    val root0 = IndexLayout.readMeta(spark, idxDir)
     assert(prefixCols(root0).contains("pos"), "fixture sanity")
     graft.sink.Sinks.writeRangeSorted(
       spark.read.parquet(s"$idxDir/prefix_v0").drop("pos"),
@@ -307,7 +307,7 @@ class StreamingJaccardIndexSpec extends SparkSpecBase {
       "sets_compacted_through" -> 0L,
       "prefix_dir" -> "prefix_pre",
       "prefix_compacted_through" -> 0L)))
-    val rootPre = Dedup.readIndexMeta(spark, idxDir)
+    val rootPre = IndexLayout.readMeta(spark, idxDir)
     assert(!prefixCols(rootPre).contains("pos"))
     assert(pairSet(Dedup.ngramJaccardAgainstPath(probe, idxDir,
         "doc_id", "text")) ==
@@ -317,7 +317,7 @@ class StreamingJaccardIndexSpec extends SparkSpecBase {
     // an append inherits the pos-less schema (mixed-schema epochs
     // would break the union); the recorded schema_prefix must agree
     apply(b2, 1L, 99)
-    val root1 = Dedup.readIndexMeta(spark, idxDir)
+    val root1 = IndexLayout.readMeta(spark, idxDir)
     assert(!spark.read.parquet(s"$idxDir/prefix_epochs/epoch=1")
       .columns.contains("pos"),
       "appends to a pos-less generation must stay pos-less")
@@ -332,7 +332,7 @@ class StreamingJaccardIndexSpec extends SparkSpecBase {
     // carries pos (the PPJoin positional filter turns on), gcounts,
     // and pos-bearing recorded schemas
     apply(b3, 2L, 2)
-    val root2 = Dedup.readIndexMeta(spark, idxDir)
+    val root2 = IndexLayout.readMeta(spark, idxDir)
     assert(IndexLayout.baseDir(root2, IndexLayout.JaccardPrefix) ==
       "prefix_v2", "compaction expected at epoch 2")
     assert(prefixCols(root2).contains("pos"),

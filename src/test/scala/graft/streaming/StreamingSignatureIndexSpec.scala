@@ -119,7 +119,8 @@ class StreamingSignatureIndexSpec extends SparkSpecBase {
     // crash window 2: meta stuck at .next (delete/rename window) —
     // the next apply recovers it before reading
     fs.rename(new org.apache.hadoop.fs.Path(idxDir, "_index_meta.json"),
-      new org.apache.hadoop.fs.Path(idxDir, "_index_meta.json.next"))
+      graft.sink.DirCommit.stagedFile(
+        new org.apache.hadoop.fs.Path(idxDir, "_index_meta.json")))
     StreamingSignatureIndex.applyBatch(b3.toDF("doc_id", "text"), 2L,
       idxDir, pairsDir, "doc_id", "text", 3, 12, 3, 0.5,
       Int.MaxValue, 5, 1 << 16)
@@ -141,7 +142,8 @@ class StreamingSignatureIndexSpec extends SparkSpecBase {
     val fs = new org.apache.hadoop.fs.Path(idxDir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.rename(new org.apache.hadoop.fs.Path(idxDir, "_index_meta.json"),
-      new org.apache.hadoop.fs.Path(idxDir, "_index_meta.json.next"))
+      graft.sink.DirCommit.stagedFile(
+        new org.apache.hadoop.fs.Path(idxDir, "_index_meta.json")))
     assert(sigSet(Dedup.readSignatureIndex(spark, idxDir).sigs) == before,
       "reader inside the promotion window must see the .next sidecar")
     // a stream restarted with different layout knobs must fail loudly
