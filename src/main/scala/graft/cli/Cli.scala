@@ -1,13 +1,10 @@
 package graft.cli
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
 import org.json4s._
 import org.json4s.jackson.JsonMethods
 import graft.catalog.Discovery
 import graft.planner.Planner
-import graft.sink.MergeSink
-import graft.sources.Sources
 import graft.spec._
 import graft.state.Bookmarks
 
@@ -67,22 +64,8 @@ object Cli {
       val p = loadSpec(specPath)
       val stream = p.streams.find(_.table == table).getOrElse(
         sys.error(s"unknown table $table"))
-      val src = Sources.fullTable(spark, sourcePathFor(p, table))
-        .filter(col(column).between(start, end))
-      val withMeta = graft.transform.Metadata.withSystemColumns(
-        graft.transform.Masking.applyAll(src, stream.transformations))
-      if (stream.keyProperties.nonEmpty)
-        MergeSink.flushPartitioned(spark, withMeta,
-          s"${p.targetPath}/$table", stream.keyProperties,
-          stream.replicationKey
-            .getOrElse(graft.transform.Metadata.ExtractedAt),
-          p.targetPartitions, p.hardDelete)
-      else
-        MergeSink.flush(spark, withMeta, s"${p.targetPath}/$table",
-          stream.keyProperties,
-          stream.replicationKey
-            .getOrElse(graft.transform.Metadata.ExtractedAt),
-          p.hardDelete)
+      Planner.partialSync(spark, p, stream, sourcePathFor(p, table),
+        column, start, end)
       println(s"partial sync done: $table $column in [$start, $end]")
     case Seq("reset_state", specPath, streams @ _*) =>
       val p = loadSpec(specPath)
@@ -172,7 +155,7 @@ object Cli {
       else { failures.foreach(System.err.println)
         sys.error("connection test failed") }
     case Seq("stop_tap", specPath) =>
-      // graceful-stop marker: Planner.run checks it between streams
+      // graceful-stop marker: Planner.run checks it before each stream
       val p = loadSpec(specPath)
       java.nio.file.Files.writeString(
         java.nio.file.Paths.get(Planner.stopMarkerPath(p)), "stop")

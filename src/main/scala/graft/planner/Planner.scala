@@ -8,6 +8,7 @@ import graft.state.Bookmarks
 import graft.sources.Sources
 import graft.sink.MergeSink
 import graft.transform.{Masking, Metadata}
+import scala.jdk.CollectionConverters._
 
 /** Stream router — the engine's `run_tap` (pipelinewise.py:1149-1316).
   *
@@ -54,130 +55,159 @@ object Planner {
   /** Run one batch sync of one stream from a parquet source dir into the
     * pipeline's target dir; returns the updated state.
     */
-  def runStream(spark: SparkSession, pipeline: PipelineSpec,
-                stream: StreamSpec, sourcePath: String,
-                state: Bookmarks): Bookmarks = {
+  private def runStream(spark: SparkSession, pipeline: PipelineSpec,
+                        stream: StreamSpec, sourcePath: String,
+                        state: Bookmarks): Bookmarks = {
     stream.validate()
     val scanned = plan(stream, state) match {
-      case InitialSnapshot =>
-        Sources.fullTable(spark, sourcePath, stream.selectedColumns)
       case IncrementalFrom(b) =>
         Sources.incremental(spark, sourcePath,
           stream.replicationKey.get, Some(jvalueToAny(b)))
-      case StreamingCdc =>
-        // batch fallback: treat the source as an accumulated change log
-        Sources.fullTable(spark, sourcePath, stream.selectedColumns)
+      // snapshot, or the LOG_BASED batch fallback: the source read as an
+      // accumulated change log
+      case _ => Sources.fullTable(spark, sourcePath)
     }
     // single-pass bookmark capture: max(replication_key) rides the merge
     // scan as an observed metric instead of a second full scan of the
     // source (Dataset.observe -> CollectMetrics; at 100 TB the saved scan
     // is the whole table)
-    val observation = stream.replicationKey.map { k =>
-      val obs = org.apache.spark.sql.Observation()
-      (obs, scanned.observe(obs, max(col(k)).as("__max_rk")))
-    }
-    val raw = observation.map(_._2).getOrElse(scanned)
-    val transformed = Metadata.withSystemColumns(
-      Masking.applyAll(raw, stream.transformations))
-    val orderCol = stream.replicationKey.getOrElse(Metadata.ExtractedAt)
-    val tablePath = s"${pipeline.targetPath}/${stream.table}"
-    stream.replicationMethod match {
-      case ReplicationMethod.FullTable =>
-        // ACTIVATE_VERSION semantics: a full-table (re)sync REPLACES the
-        // table via atomic staged swap — stale rows from prior versions
-        // are dropped (tap full_table.py:98-103; fastsync's SWAP WITH)
-        val deduped =
-          if (stream.keyProperties.nonEmpty)
-            MergeSink.dedupLastWins(transformed, stream.keyProperties,
-              orderCol)
-          else transformed
-        MergeSink.publish(deduped, tablePath)
-      case _ =>
-        // keyed streams take the partitioned incremental path: per-flush
-        // I/O is proportional to the batch's key spread, not the target
-        // size (the 100 TB steady-state merge). No-PK streams append.
-        if (stream.keyProperties.nonEmpty)
-          MergeSink.flushPartitioned(spark, transformed, tablePath,
-            stream.keyProperties, orderCol, pipeline.targetPartitions,
-            pipeline.hardDelete)
-        else
-          MergeSink.flush(spark, transformed, tablePath,
-            stream.keyProperties, orderCol, pipeline.hardDelete)
-    }
-
-    stream.replicationKey match {
-      case Some(k) =>
-        // read the observed max captured during the flush/publish action —
-        // NOT Sources.nextBookmark, which would scan the source again
-        observation.flatMap(o => Option(o._1.get.getOrElse("__max_rk", null)))
-          match {
-          case Some(v) =>
-            val jv: JValue = v match {
-              case l: Long => JLong(l)
-              case i: Int => JLong(i.toLong)
-              case d: Double => JDouble(d)
-              case s: String => JString(s)
-              case ts: java.sql.Timestamp => JString(ts.toString)
-              case dt: java.sql.Date => JString(dt.toString)
-              case other => JString(String.valueOf(other))
-            }
-            state.updated(stream.name, Map(
-              "replication_key" -> JString(k),
-              "replication_key_value" -> jv))
-          case None => state
-        }
-      case None => state
+    val observation = stream.replicationKey
+      .map(k => k -> org.apache.spark.sql.Observation())
+    load(spark, pipeline, stream, observation.fold(scanned) {
+      case (k, obs) => scanned.observe(obs, max(col(k)).as("__max_rk"))
+    }, replace = stream.replicationMethod == ReplicationMethod.FullTable)
+    // read the observed max captured during the load's action — NOT
+    // Sources.nextBookmark, which would scan the source again
+    observation.flatMap { case (k, obs) =>
+      Option(obs.get.getOrElse("__max_rk", null)).map(k -> _)
+    }.fold(state) { case (k, v) =>
+      val jv: JValue = v match {
+        case l: Long => JLong(l)
+        case i: Int => JLong(i.toLong)
+        case d: Double => JDouble(d)
+        case s: String => JString(s)
+        case ts: java.sql.Timestamp => JString(ts.toString)
+        case dt: java.sql.Date => JString(dt.toString)
+        case other => JString(String.valueOf(other))
+      }
+      state.updated(stream.name, Map(
+        "replication_key" -> JString(k), "replication_key_value" -> jv))
     }
   }
 
-  /** Stop-marker path for a pipeline — `stop_tap` writes it, [[run]]
-    * checks it between streams (the reference SIGTERMs the tap process;
-    * our unit of graceful interruption is the stream boundary, where
-    * state is consistent).
+  /** Ranged re-sync of one stream (`partial_sync_table`,
+    * pipelinewise.py:1723-1867): the source rows with `column` in
+    * [start, end] go through the stream's load step and are merged into
+    * the target — never a replace — and the bookmark is left as it is.
+    */
+  def partialSync(spark: SparkSession, pipeline: PipelineSpec,
+                  stream: StreamSpec, sourcePath: String, column: String,
+                  start: String, end: String): Unit = {
+    stream.validate()
+    load(spark, pipeline, stream, Sources.fullTable(spark, sourcePath)
+      .filter(col(column).between(start, end)), replace = false)
+  }
+
+  /** The one load step every plan ends in: column selection, masking and
+    * system columns on whatever was scanned, then the sink. `replace` is
+    * ACTIVATE_VERSION semantics: a full-table (re)sync REPLACES the table
+    * via atomic staged swap — stale rows from prior versions are dropped
+    * (tap full_table.py:98-103; fastsync's SWAP WITH). Otherwise keyed
+    * streams take the partitioned incremental path — per-flush I/O is
+    * proportional to the batch's key spread, not the target size (the
+    * 100 TB steady-state merge) — and no-PK streams append.
+    */
+  private def load(spark: SparkSession, pipeline: PipelineSpec,
+                   stream: StreamSpec, scanned: DataFrame,
+                   replace: Boolean): Unit = {
+    val selected = stream.selectedColumns
+      .fold(scanned)(cs => scanned.select(cs.map(col): _*))
+    val rows = Metadata.withSystemColumns(
+      Masking.applyAll(selected, stream.transformations))
+    val pks = stream.keyProperties
+    val orderCol = stream.replicationKey.getOrElse(Metadata.ExtractedAt)
+    val tablePath = s"${pipeline.targetPath}/${stream.table}"
+    if (replace)
+      MergeSink.publish(
+        if (pks.nonEmpty) MergeSink.dedupLastWins(rows, pks, orderCol)
+        else rows, tablePath)
+    else if (pks.nonEmpty)
+      MergeSink.flushPartitioned(spark, rows, tablePath, pks, orderCol,
+        pipeline.targetPartitions, pipeline.hardDelete)
+    else
+      MergeSink.flush(spark, rows, tablePath, pks, orderCol,
+        pipeline.hardDelete)
+  }
+
+  /** Stop-marker path for a pipeline: `stop_tap` writes it and every
+    * stream checks it before it starts (the reference SIGTERMs the tap
+    * process; our unit of graceful interruption is the stream boundary,
+    * where state is consistent).
     */
   def stopMarkerPath(pipeline: PipelineSpec): String =
     pipeline.statePath + ".stop"
 
-  /** Run all selected streams; persists state after each stream (the
-    * reference throttles state writes; per-stream granularity is our
-    * micro-batch commit cadence).
+  /** Run all selected streams, `parallelism` at a time. Parallel per-table
+    * sync is the FastSync process pool (mysql_to_snowflake.py:225-233,
+    * pool = min(config, cpu_count)) as concurrent Spark jobs on the
+    * driver: each stream's job graph is submitted from its own thread and
+    * the scheduler interleaves their tasks. Pool threads start from the
+    * calling thread, so they inherit its Spark local properties.
+    *
+    * Every stream runs the same body: stop-marker check, status log, the
+    * sync with its errors isolated, then its bookmark merged into the
+    * shared state under one lock and offered to the throttled writer
+    * (the reference throttles state writes; per-stream granularity is our
+    * micro-batch commit cadence). The state is flushed and saved once
+    * after the last stream.
     */
   def run(spark: SparkSession, pipeline: PipelineSpec,
           sourcePathFor: String => String,
           onError: (String, Throwable) => Unit = defaultAlert,
-          logDir: Option[String] = None): Bookmarks = {
+          logDir: Option[String] = None,
+          parallelism: Int = 1): Bookmarks = {
+    val stateLock = new Object
     var state = Bookmarks.load(pipeline.statePath)
     val writer = new Bookmarks.ThrottledWriter(pipeline.statePath)
     val stopMarker = java.nio.file.Paths.get(stopMarkerPath(pipeline))
     java.nio.file.Files.deleteIfExists(stopMarker)
-    // iterator: the marker check interleaves with execution (a strict
-    // Seq.takeWhile would check everything before the first stream runs)
-    pipeline.streams.iterator.takeWhile { _ =>
-      !java.nio.file.Files.exists(stopMarker)
-    }.foreach { s =>
-      // log/alert IO must NEVER abort replication: a full disk or a
-      // throwing alert handler still leaves the loop running, the state
-      // flushed, and the remaining streams synced
-      def quietly(what: String)(body: => Unit): Unit =
-        try body catch { case e: Throwable =>
-          System.err.println(s"[graft] $what failed: ${e.getMessage}") }
-      var log: Option[StreamLog] = None
-      quietly("stream log init") {
-        log = logDir.map(new StreamLog(_, pipeline.id, s.name))
+    def runOne(s: StreamSpec): Unit =
+      if (!java.nio.file.Files.exists(stopMarker)) {
+        // log/alert IO must NEVER abort replication: a full disk or a
+        // throwing alert handler still leaves the loop running, the state
+        // flushed, and the remaining streams synced
+        def quietly(what: String)(body: => Unit): Unit =
+          try body catch { case e: Throwable =>
+            System.err.println(s"[graft] $what failed: ${e.getMessage}") }
+        var log: Option[StreamLog] = None
+        quietly("stream log init") {
+          log = logDir.map(new StreamLog(_, pipeline.id, s.name))
+        }
+        try {
+          val synced = runStream(spark, pipeline, s, sourcePathFor(s.table),
+            stateLock.synchronized(state))
+          stateLock.synchronized {
+            synced.get(s.name).foreach(v => state = state.updated(s.name, v))
+            writer.offer(state)
+          }
+          quietly("stream log")(log.foreach(_.success()))
+        } catch {
+          // a failed stream alerts and is skipped; the run continues and
+          // its bookmark is untouched, so the next run retries it
+          // (reference: send_alert + .failed log, pipelinewise.py:120,
+          // commands.py:532-543)
+          case e: Throwable =>
+            quietly("stream log")(log.foreach(_.fail(e)))
+            quietly("alert dispatch")(onError(s.name, e))
+        }
       }
-      try {
-        state = runStream(spark, pipeline, s, sourcePathFor(s.table), state)
-        writer.offer(state)
-        quietly("stream log")(log.foreach(_.success()))
-      } catch {
-        // a failed stream alerts and is skipped; the run continues and
-        // its bookmark is untouched, so the next run retries it
-        // (reference: send_alert + .failed log, pipelinewise.py:120,
-        // commands.py:532-543)
-        case e: Throwable =>
-          quietly("stream log")(log.foreach(_.fail(e)))
-          quietly("alert dispatch")(onError(s.name, e))
-      }
+    val threads = math.min(parallelism, pipeline.streams.size)
+    if (threads <= 1) pipeline.streams.foreach(runOne)
+    else {
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(threads)
+      val tasks: Seq[java.util.concurrent.Callable[Unit]] =
+        pipeline.streams.map(s => () => runOne(s))
+      try pool.invokeAll(tasks.asJava) finally pool.shutdown()
     }
     writer.flush()
     state.save(pipeline.statePath)
@@ -218,39 +248,4 @@ object Planner {
 
   private def defaultAlert(stream: String, e: Throwable): Unit =
     System.err.println(s"[graft-alert] stream $stream failed: ${e.getMessage}")
-
-  /** Parallel per-table sync — the FastSync process pool
-    * (mysql_to_snowflake.py:225-233, pool = min(config, cpu_count))
-    * becomes concurrent Spark jobs on the driver: each stream's job graph
-    * is submitted from its own thread and the cluster scheduler
-    * interleaves their tasks. State updates are serialized.
-    */
-  def runParallel(spark: SparkSession, pipeline: PipelineSpec,
-                  sourcePathFor: String => String,
-                  parallelism: Int = Runtime.getRuntime.availableProcessors)
-      : Bookmarks = {
-    import java.util.concurrent.Executors
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    val pool = Executors.newFixedThreadPool(
-      math.max(1, math.min(parallelism, pipeline.streams.size)))
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-    val stateLock = new Object
-    var state = Bookmarks.load(pipeline.statePath)
-    try {
-      val futures = pipeline.streams.map { s =>
-        Future {
-          val st0 = stateLock.synchronized(state)
-          val st1 = runStream(spark, pipeline, s, sourcePathFor(s.table), st0)
-          stateLock.synchronized {
-            // merge just this stream's bookmark into the shared state
-            st1.get(s.name).foreach(v => state = state.updated(s.name, v))
-            state.save(pipeline.statePath)
-          }
-        }
-      }
-      futures.foreach(f => Await.result(f, Duration.Inf))
-      state
-    } finally pool.shutdown()
-  }
 }

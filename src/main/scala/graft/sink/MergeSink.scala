@@ -272,6 +272,13 @@ object MergeSink {
                     pks: Seq[String], orderCol: String,
                     numBuckets: Int, hardDelete: Boolean = false)
       : DataFrame = {
+    // DirCommit's recovery rule: a kill between the two renames below
+    // leaves only the retired copy, which is the table — restore it
+    // before anything reads, bootstraps or drops
+    val retired = tableName + "_retired"
+    if (!spark.catalog.tableExists(tableName) &&
+        spark.catalog.tableExists(retired))
+      spark.sql(s"ALTER TABLE $retired RENAME TO $tableName")
     val deduped =
       if (pks.nonEmpty) dedupLastWins(batch, pks, orderCol) else batch
     val merged =
@@ -286,7 +293,6 @@ object MergeSink {
     val stage = tableName + "_stage"
     publishBucketed(merged, stage, pks, numBuckets)
     if (spark.catalog.tableExists(tableName)) {
-      val retired = tableName + "_retired"
       spark.sql(s"DROP TABLE IF EXISTS $retired")
       spark.sql(s"ALTER TABLE $tableName RENAME TO $retired")
       spark.sql(s"ALTER TABLE $stage RENAME TO $tableName")

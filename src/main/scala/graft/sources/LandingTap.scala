@@ -12,7 +12,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Spark takes over at the landing directory: `spark.read.json` gives
   * schema inference, and everything downstream (masking, metadata
   * columns, merge) is the same engine path every other source uses. At
-  * scale, many taps/streams land in parallel (Planner.runParallel) and
+  * scale, many taps/streams land in parallel (Planner.run parallelism) and
   * each landing dir is read as one distributed scan.
   */
 trait LandingTap {

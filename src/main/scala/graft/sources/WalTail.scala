@@ -40,8 +40,9 @@ import org.apache.spark.unsafe.types.UTF8String
   *    (`ReadLimit.maxFiles` — the poll loop's bounded fetch), and
   *    `Trigger.AvailableNow` drains to a snapshot then stops.
   *
-  * Log contract (the landed form [[graft.streaming.StreamingMerge
-  * .startWal2Json]] already established): each segment file holds
+  * Log contract (the landed form of the slot's poll loop, which
+  * [[graft.streaming.StreamingMerge.startWalSlot]] decodes and merges):
+  * each segment file holds
   * `<lsn>\t<wal2json line>` rows, LSN-ascending within a segment;
   * segment file names sort in LSN order (WAL segment names encode
   * position); a segment is immutable once visible — writers stage and

@@ -11,14 +11,19 @@ import graft.sink.MergeSink
   * a long poll loop and flushes PK-deduped batches
   * (tap-postgres logical_replication.py:577-737,
   * tap-mysql binlog.py:818-883, target __init__.py:160-226). Spark-native:
-  * a streaming read (file source here; kafka in production) feeds
-  * `foreachBatch`, and every micro-batch is applied with the same
-  * idempotent merge used by the batch path. Checkpointing gives resumable
-  * offsets — the STATE-message analogue.
+  * a streaming read feeds `foreachBatch`, and every micro-batch is
+  * applied with the same idempotent merge used by the batch path.
+  * Checkpointing gives resumable offsets — the STATE-message analogue.
   *
-  * Change events are expected in a Debezium-ish envelope: the row columns
-  * plus `op` (c/u/d) and an ordering column (offset/LSN/ts). Deletes become
-  * `_sdc_deleted_at` tombstones (soft) or merge-deletes (hard).
+  * Four starters differ only in what they read and decode: [[start]]
+  * takes parquet change files, and the slot starters ([[startWalSlot]],
+  * [[startBinlogSlot]], [[startChangeStreamSlot]]) tail landed log
+  * segments through the `graft-wal-tail` slot source. All of them end in
+  * one tail: a checkpointed `foreachBatch` that runs [[flushBatch]].
+  *
+  * Change events carry an envelope: the row columns plus `op` (c/u/d) and
+  * an ordering column (offset/LSN/ts). Deletes become `_sdc_deleted_at`
+  * tombstones (soft) or merge-deletes (hard).
   */
 object StreamingMerge {
 
@@ -29,8 +34,9 @@ object StreamingMerge {
           .otherwise(lit(null).cast("timestamp")))
       .drop(opCol)
 
-  /** Start a streaming merge of change files appearing under `sourceDir`
-    * into the parquet table at `tablePath`.
+  /** Start a streaming merge of parquet change files appearing under
+    * `sourceDir` into the table at `tablePath`: a keyed stream merges,
+    * an unkeyed one appends (see [[flushBatch]]).
     */
   def start(spark: SparkSession, sourceDir: String,
             schema: org.apache.spark.sql.types.StructType,
@@ -38,93 +44,24 @@ object StreamingMerge {
             pks: Seq[String], orderCol: String,
             hardDelete: Boolean = false,
             trigger: Trigger = Trigger.AvailableNow(),
-            targetPartitions: Int = 64): StreamingQuery = {
-    val stream = spark.readStream.schema(schema).parquet(sourceDir)
-    applyEnvelope(stream)
-      .writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        // keyed CDC streams merge via the partitioned incremental path:
-        // a micro-batch rewrites only the PK-hash partitions it touches
-        if (pks.nonEmpty)
-          MergeSink.flushPartitioned(batch.sparkSession, batch, tablePath,
-            pks, orderCol, targetPartitions, hardDelete)
-        else
-          MergeSink.flush(batch.sparkSession, batch, tablePath, pks,
-            orderCol, hardDelete)
-      }
-      .start()
-  }
+            targetPartitions: Int = 64): StreamingQuery =
+    tail(applyEnvelope(spark.readStream.schema(schema).parquet(sourceDir)),
+      checkpoint, trigger)(flushBatch("merge", tablePath, pks, orderCol,
+        targetPartitions, hardDelete))
 
-  /** High-frequency LOG_BASED replication via the merge-on-read path:
-    * each micro-batch lands as one O(batch) delta file and compaction
-    * amortizes the rewrite (docs/MERGE_SCALING.md) — the right flush
-    * shape for sub-minute triggers against very large targets, where
-    * any per-batch rewrite (full or partitioned) would dominate.
-    * Consumers read with [[graft.sink.DeltaMerge.readMerged]].
-    */
-  def startDelta(spark: SparkSession, sourceDir: String,
-                 schema: org.apache.spark.sql.types.StructType,
-                 tablePath: String, checkpoint: String,
-                 pks: Seq[String], orderCol: String,
-                 hardDelete: Boolean = false,
-                 trigger: Trigger = Trigger.AvailableNow(),
-                 compactDeltaFraction: Double = 0.1): StreamingQuery = {
-    val stream = spark.readStream.schema(schema).parquet(sourceDir)
-    applyEnvelope(stream)
-      .writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.sink.DeltaMerge.flushAuto(batch.sparkSession, batch,
-          tablePath, pks, orderCol, hardDelete, compactDeltaFraction)
-        ()
-      }
-      .start()
-  }
-
-  /** LOG_BASED replication straight off raw wal2json v2 lines: a text
-    * file stream of (lsn \t payload) lines — the landed form of the
-    * replication-slot poll loop (logical_replication.py:577-737) — is
-    * decoded per micro-batch and merged via the partitioned incremental
-    * path. The decode is all codegen'd expressions, so it rides inside
-    * the stream's scan stage.
-    */
-  def startWal2Json(spark: SparkSession, sourceDir: String,
-                    schemaName: String, tableName: String,
-                    rowSchema: org.apache.spark.sql.types.StructType,
-                    tablePath: String, checkpoint: String,
-                    pks: Seq[String], hardDelete: Boolean = false,
-                    trigger: Trigger = Trigger.AvailableNow(),
-                    targetPartitions: Int = 64): StreamingQuery = {
-    val lines = spark.readStream.text(sourceDir)
-      .select(
-        split(col("value"), "\t", 2).getItem(0).cast("long").as("lsn"),
-        split(col("value"), "\t", 2).getItem(1).as("payload"))
-    graft.sources.Wal2Json
-      .decode(lines, "payload", "lsn", schemaName, tableName, rowSchema)
-      .transform(applyEnvelope(_))
-      .writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        MergeSink.flushPartitioned(batch.sparkSession, batch, tablePath,
-          pks, "_sdc_lsn", targetPartitions, hardDelete)
-      }
-      .start()
-  }
-
-  /** [[startWal2Json]] served from the SLOT source instead of the file
-    * source: [[graft.sources.WalTailProvider]] tracks LSN offsets,
-    * persists the confirmed-flush LSN on every commit (the
-    * `send_feedback` analogue — `cur.send_feedback` in `sync_tables`,
-    * logical_replication.py:674,715), and a
-    * restart without its Spark checkpoint resumes from the slot file —
-    * the reference's `confirmed_flush_lsn` restart, which the plain
-    * file source cannot express (its offsets are file lists pinned to
-    * one checkpoint). Decode and merge are identical to
-    * [[startWal2Json]].
+  /** LOG_BASED replication off landed wal2json v2 segments
+    * (`<lsn>\t<payload>` lines — the replication-slot poll loop,
+    * logical_replication.py:577-737), served by the slot source:
+    * [[graft.sources.WalTailProvider]] tracks LSN offsets, persists the
+    * confirmed-flush LSN on every commit (the `send_feedback` analogue —
+    * `cur.send_feedback` in `sync_tables`, logical_replication.py:674,715),
+    * and a restart without its Spark checkpoint resumes from the slot
+    * file — the reference's `confirmed_flush_lsn` restart. The decode is
+    * all codegen'd expressions, so it rides inside the stream's scan
+    * stage; the merge orders by `_sdc_lsn`. `slotFile` relocates the
+    * confirmed-flush feedback outside the segment dir, so several slot
+    * consumers can drain ONE immutable segment fixture, each with its own
+    * cursor, without writing into the shared dir.
     */
   def startWalSlot(spark: SparkSession, logDir: String,
                    schemaName: String, tableName: String,
@@ -135,58 +72,14 @@ object StreamingMerge {
                    targetPartitions: Int = 64,
                    maxFilesPerTrigger: Option[Int] = None,
                    flush: String = "merge",
-                   compactDeltaFraction: Double = 0.1,
                    slotFile: Option[String] = None)
-      : StreamingQuery = {
-    requireFlushMode(flush)
-    // slotFile relocates the confirmed-flush feedback outside the
-    // segment dir (the source option it forwards to) — several slot
-    // consumers can then drain ONE immutable segment fixture, each
-    // with its own cursor, without writing into the shared dir
-    val reader0 = spark.readStream.format("graft-wal-tail")
-      .option("path", logDir)
-    val reader = slotFile.fold(reader0)(f => reader0.option("slotFile", f))
-    val lines = maxFilesPerTrigger
-      .fold(reader)(n => reader.option("maxFilesPerTrigger", n)).load()
-    graft.sources.Wal2Json
-      .decode(lines, "payload", "lsn", schemaName, tableName, rowSchema)
-      .transform(applyEnvelope(_))
-      .writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        flushBatch(flush, batch, tablePath, pks, "_sdc_lsn",
-          targetPartitions, hardDelete, compactDeltaFraction)
-      }
-      .start()
-  }
-
-  /** Per-batch flush dispatch for the slot starters: `merge` = the
-    * partitioned in-place MERGE (touched PK buckets rewritten per
-    * batch — the default, simplest-to-read layout); `delta` = the
-    * merge-on-read path (one O(batch) delta file per micro-batch,
-    * auto-compaction at `compactDeltaFraction` of base bytes) — the
-    * sub-minute-trigger spelling where any per-batch rewrite would
-    * floor throughput (StressWalTail A/B in BASELINE.md). Delta
-    * tables are read with [[graft.sink.DeltaMerge.readMerged]].
-    */
-  private def flushBatch(flush: String, batch: DataFrame,
-                         tablePath: String, pks: Seq[String],
-                         orderCol: String, targetPartitions: Int,
-                         hardDelete: Boolean,
-                         compactDeltaFraction: Double): Unit =
-    flush match {
-      case "merge" =>
-        MergeSink.flushPartitioned(batch.sparkSession, batch, tablePath,
-          pks, orderCol, targetPartitions, hardDelete)
-      case "delta" =>
-        graft.sink.DeltaMerge.flushAuto(batch.sparkSession, batch,
-          tablePath, pks, orderCol, hardDelete, compactDeltaFraction)
-    }
-
-  private def requireFlushMode(flush: String): Unit =
-    require(flush == "merge" || flush == "delta",
-      s"unknown slot flush mode '$flush' (expected merge | delta)")
+      : StreamingQuery =
+    tail(graft.sources.Wal2Json
+      .decode(slot(spark, logDir, pks, maxFilesPerTrigger, slotFile), "payload",
+        "lsn", schemaName, tableName, rowSchema)
+      .transform(applyEnvelope(_)), checkpoint, trigger)(
+      flushBatch(flush, tablePath, pks, "_sdc_lsn", targetPartitions,
+        hardDelete))
 
   /** The MySQL-side slot twin of [[startWalSlot]]: landed binlog
     * row-event segments (`<seq>\t<event json>` lines — `seq` is the
@@ -209,27 +102,15 @@ object StreamingMerge {
                       trigger: Trigger = Trigger.AvailableNow(),
                       targetPartitions: Int = 64,
                       maxFilesPerTrigger: Option[Int] = None,
-                      flush: String = "merge",
-                      compactDeltaFraction: Double = 0.1)
-      : StreamingQuery = {
-    requireFlushMode(flush)
-    val reader = spark.readStream.format("graft-wal-tail")
-      .option("path", logDir)
-    val lines = maxFilesPerTrigger
-      .fold(reader)(n => reader.option("maxFilesPerTrigger", n)).load()
+                      flush: String = "merge")
+      : StreamingQuery =
     // decode emits the envelope itself (`_sdc_deleted_at` from delete
     // events' timestamps) — no applyEnvelope pass
-    graft.sources.BinlogRows
-      .decode(lines, "payload", schemaName, tableName, rowSchema)
-      .writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        flushBatch(flush, batch, tablePath, pks, "_binlog_seq",
-          targetPartitions, hardDelete, compactDeltaFraction)
-      }
-      .start()
-  }
+    tail(graft.sources.BinlogRows
+      .decode(slot(spark, logDir, pks, maxFilesPerTrigger, None), "payload",
+        schemaName, tableName, rowSchema), checkpoint, trigger)(
+      flushBatch(flush, tablePath, pks, "_binlog_seq", targetPartitions,
+        hardDelete))
 
   /** The MongoDB twin: landed ChangeStream documents
     * (`<seq>\t<event json>` segments — `seq` is the landing writer's
@@ -241,9 +122,7 @@ object StreamingMerge {
     * the LIVE collection via `sourceColl` (a thunk — the reference
     * refetches at flush time, not at stream-start time;
     * change_streams.py:160-163, flush at :199) before the
-    * last-write-wins merge on `_cs_token`. All three CDC families
-    * (wal2json / binlog / ChangeStreams) now share the slot consume
-    * loop offline.
+    * last-write-wins merge on `_cs_token`.
     */
   def startChangeStreamSlot(spark: SparkSession, logDir: String,
                             dbName: String, collName: String,
@@ -255,28 +134,70 @@ object StreamingMerge {
                             trigger: Trigger = Trigger.AvailableNow(),
                             targetPartitions: Int = 64,
                             maxFilesPerTrigger: Option[Int] = None,
-                            flush: String = "merge",
-                            compactDeltaFraction: Double = 0.1)
-      : StreamingQuery = {
-    requireFlushMode(flush)
+                            flush: String = "merge")
+      : StreamingQuery =
+    tail(graft.sources.ChangeStreams
+      .decode(slot(spark, logDir, pks, maxFilesPerTrigger, None), "payload",
+        dbName, collName, rowSchema, idField = pks.head),
+      checkpoint, trigger)(
+      // the flush-time refetch joins the update ids back to the CURRENT
+      // collection (the ChangeStreamsSpec batch chain)
+      flushBatch(flush, tablePath, pks, "_cs_token", targetPartitions,
+        hardDelete).compose((batch: DataFrame) =>
+        applyEnvelope(refetchUpdates(batch, sourceColl(), pks.head))))
+
+  /** The slot source over the segment dir `logDir`. A slot stream is
+    * applied by key (the partitioned merge and the delta flush both need
+    * one), so an unkeyed one fails here, at start, not on its first batch.
+    */
+  private def slot(spark: SparkSession, logDir: String, pks: Seq[String],
+                   maxFilesPerTrigger: Option[Int],
+                   slotFile: Option[String]): DataFrame = {
+    require(pks.nonEmpty, s"a slot stream over $logDir needs primary keys")
     val reader = spark.readStream.format("graft-wal-tail")
       .option("path", logDir)
-    val lines = maxFilesPerTrigger
-      .fold(reader)(n => reader.option("maxFilesPerTrigger", n)).load()
-    graft.sources.ChangeStreams
-      .decode(lines, "payload", dbName, collName, rowSchema,
-        idField = pks.head)
-      .writeStream
+    val capped = maxFilesPerTrigger
+      .fold(reader)(n => reader.option("maxFilesPerTrigger", n))
+    slotFile.fold(capped)(f => capped.option("slotFile", f)).load()
+  }
+
+  /** The tail every starter ends in: a checkpointed `foreachBatch` that
+    * hands each micro-batch to `flush`.
+    */
+  private def tail(changes: DataFrame, checkpoint: String, trigger: Trigger)
+                  (flush: DataFrame => Unit): StreamingQuery =
+    changes.writeStream
       .option("checkpointLocation", checkpoint)
       .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        // the flush-time refetch joins the update ids back to the
-        // CURRENT collection (the ChangeStreamsSpec batch chain)
-        val refetched = refetchUpdates(batch, sourceColl(), pks.head)
-        flushBatch(flush, applyEnvelope(refetched), tablePath, pks,
-          "_cs_token", targetPartitions, hardDelete, compactDeltaFraction)
-      }
+      .foreachBatch { (batch: DataFrame, _: Long) => flush(batch) }
       .start()
+
+  /** Per-batch flush for every starter. `merge`: a keyed stream takes the
+    * partitioned in-place MERGE (a micro-batch rewrites only the PK-hash
+    * buckets it touches — the default, simplest-to-read layout) and an
+    * unkeyed one (only [[start]] admits one) appends. `delta`, which the
+    * slot starters offer: the merge-on-read path (one O(batch)
+    * delta file per micro-batch, auto-compaction once deltas outgrow a
+    * fraction of the base) — the sub-minute-trigger spelling where any
+    * per-batch rewrite would floor throughput (StressWalTail A/B in
+    * BASELINE.md). Delta tables are read with
+    * [[graft.sink.DeltaMerge.readMerged]].
+    */
+  private def flushBatch(flush: String, tablePath: String, pks: Seq[String],
+                         orderCol: String, targetPartitions: Int,
+                         hardDelete: Boolean): DataFrame => Unit = {
+    require(flush == "merge" || flush == "delta",
+      s"unknown flush mode '$flush' (expected merge | delta)")
+    batch =>
+      if (flush == "delta")
+        graft.sink.DeltaMerge.flushAuto(batch.sparkSession, batch,
+          tablePath, pks, orderCol, hardDelete)
+      else if (pks.nonEmpty)
+        MergeSink.flushPartitioned(batch.sparkSession, batch, tablePath,
+          pks, orderCol, targetPartitions, hardDelete)
+      else
+        MergeSink.flush(batch.sparkSession, batch, tablePath, pks,
+          orderCol, hardDelete)
   }
 
   /** Watermarked tumbling-window aggregate over an event stream — the

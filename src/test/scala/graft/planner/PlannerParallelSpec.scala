@@ -20,7 +20,7 @@ class PlannerParallelSpec extends SparkSpecBase {
       tables.map(t => StreamSpec(s"s-$t", t, Seq("id"),
         ReplicationMethod.Incremental, Some("seq"))),
       targetPath = s"$dir/tgt", statePath = s"$dir/state.json")
-    val state = Planner.runParallel(spark, pipeline,
+    val state = Planner.run(spark, pipeline,
       t => s"$dir/src/$t.parquet", parallelism = 4)
     tables.foreach { t =>
       assert(spark.read.parquet(s"$dir/tgt/$t").count() == 2)
@@ -28,6 +28,71 @@ class PlannerParallelSpec extends SparkSpecBase {
     }
     // state file holds all four bookmarks
     assert(Bookmarks.load(s"$dir/state.json").bookmarks.size == 4)
+  }
+
+  test("parallel run: a failed stream alerts and logs .failed, the rest " +
+    "sync and save bookmarks, and the stop marker stops later streams") {
+    import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch,
+      TimeUnit}
+    val dir = Files.createTempDirectory("parfail").toString
+    val first = Seq("missing", "g1", "g2", "g3")
+    val late = Seq("late1", "late2")
+    (first.tail ++ late).foreach { t =>
+      Seq((1L, s"$t-a", 1L), (2L, s"$t-b", 2L)).toDF("id", "v", "seq")
+        .write.parquet(s"$dir/src/$t.parquet")
+    }
+    val pipeline = PipelineSpec("pf",
+      (first ++ late).map(t => StreamSpec(s"s-$t", t, Seq("id"),
+        ReplicationMethod.Incremental, Some("seq"))),
+      targetPath = s"$dir/tgt", statePath = s"$dir/state.json")
+    // four threads take the first four streams; once all four are inside
+    // their sync, the stop marker appears, so the two queued streams find
+    // it when they would start
+    val started = new CountDownLatch(first.size)
+    val marker = java.nio.file.Paths.get(Planner.stopMarkerPath(pipeline))
+    def sourcePathFor(t: String): String = {
+      started.countDown()
+      assert(started.await(120, TimeUnit.SECONDS), "first wave never met")
+      Files.writeString(marker, "stop")
+      s"$dir/src/$t.parquet"
+    }
+    val alerted = new ConcurrentLinkedQueue[String]()
+    // a local property the caller sets reaches every job the pool runs
+    val sc = spark.sparkContext
+    val jobTags = new ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobTags.add(String.valueOf(e.properties.getProperty("graft.phase")))
+    }
+    sc.addSparkListener(listener)
+    sc.setLocalProperty("graft.phase", "pf")
+    val state =
+      try Planner.run(spark, pipeline, sourcePathFor,
+        onError = (stream, _) => alerted.add(stream),
+        logDir = Some(s"$dir/logs"), parallelism = 4)
+      finally {
+        sc.setLocalProperty("graft.phase", null)
+        org.apache.spark.sql.graftbridge.ListenerBus.drain(sc)
+        sc.removeSparkListener(listener)
+      }
+    assert(!jobTags.isEmpty && jobTags.toArray.forall(_ == "pf"),
+      jobTags.toArray.distinct.mkString(","))
+    assert(alerted.toArray.toSeq == Seq("s-missing"))
+    def exists(n: String) = Files.exists(java.nio.file.Paths.get(n))
+    assert(exists(s"$dir/logs/pf-s-missing.log.failed"))
+    first.tail.foreach { t =>
+      assert(exists(s"$dir/logs/pf-s-$t.log.success"), t)
+      assert(spark.read.parquet(s"$dir/tgt/$t").count() == 2, t)
+    }
+    late.foreach { t =>
+      assert(!exists(s"$dir/tgt/$t"), s"$t synced after the stop marker")
+      Seq("running", "success", "failed").foreach(st =>
+        assert(!exists(s"$dir/logs/pf-s-$t.log.$st"), s"$t log .$st"))
+    }
+    val saved = Bookmarks.load(s"$dir/state.json")
+    assert(saved.bookmarks.keySet == first.tail.map(t => s"s-$t").toSet)
+    assert(state.bookmarks.keySet == saved.bookmarks.keySet)
   }
 
   test("a failed stream alerts and is skipped; the rest still sync") {

@@ -34,4 +34,23 @@ class BucketedMergeSpec extends SparkSpecBase {
       .select("id", "v").as[(Long, String)].collect()
     assert(out.toSeq == Seq((1L, "a"), (2L, "b2"), (3L, "c"), (4L, "d")))
   }
+
+  test("a kill between the two promote renames loses no row") {
+    val t = "graft_bucketed_t2"
+    Seq("", "_stage", "_retired").foreach(s =>
+      spark.sql(s"DROP TABLE IF EXISTS $t$s"))
+    val b1 = Seq((1L, "a", 1L), (2L, "b", 1L), (3L, "c", 1L))
+      .toDF("id", "v", "seq")
+    MergeSink.flushBucketed(spark, b1, t, Seq("id"), "seq", numBuckets = 4)
+    // the state a kill leaves after the first rename of the promote:
+    // the table retired, the stage not yet renamed into its place
+    spark.sql(s"ALTER TABLE $t RENAME TO ${t}_retired")
+
+    val b2 = Seq((2L, "b2", 2L), (4L, "d", 2L)).toDF("id", "v", "seq")
+    MergeSink.flushBucketed(spark, b2, t, Seq("id"), "seq", numBuckets = 4)
+    val out = spark.table(t).orderBy("id")
+      .select("id", "v").as[(Long, String)].collect()
+    assert(out.toSeq == Seq((1L, "a"), (2L, "b2"), (3L, "c"), (4L, "d")))
+    assert(!spark.catalog.tableExists(s"${t}_retired"))
+  }
 }

@@ -62,7 +62,7 @@ class StreamingMergeSpec extends SparkSpecBase {
       "2\t" + """{"action":"I","schema":"public","table":"t","columns":[{"name":"id","type":"bigint","value":1},{"name":"v","type":"text","value":"a"}]}""",
       "3\t" + """{"action":"I","schema":"public","table":"t","columns":[{"name":"id","type":"bigint","value":2},{"name":"v","type":"text","value":"b"}]}""",
       "4\t" + """{"action":"C"}"""))
-    val q1 = StreamingMerge.startWal2Json(spark, srcDir, "public", "t",
+    val q1 = StreamingMerge.startWalSlot(spark, srcDir, "public", "t",
       rowSchema, tablePath, ckpt, Seq("id"), hardDelete = true,
       targetPartitions = 4)
     q1.processAllAvailable(); q1.stop()
@@ -72,7 +72,7 @@ class StreamingMergeSpec extends SparkSpecBase {
     land("w2.txt", Seq(
       "5\t" + """{"action":"U","schema":"public","table":"t","columns":[{"name":"id","type":"bigint","value":1},{"name":"v","type":"text","value":"a2"}]}""",
       "6\t" + """{"action":"D","schema":"public","table":"t","identity":[{"name":"id","type":"bigint","value":2}]}"""))
-    val q2 = StreamingMerge.startWal2Json(spark, srcDir, "public", "t",
+    val q2 = StreamingMerge.startWalSlot(spark, srcDir, "public", "t",
       rowSchema, tablePath, ckpt, Seq("id"), hardDelete = true,
       targetPartitions = 4)
     q2.processAllAvailable(); q2.stop()
@@ -84,25 +84,36 @@ class StreamingMergeSpec extends SparkSpecBase {
 
   test("LOG_BASED high-frequency: delta flushes + merge-on-read converge") {
     val dir = Files.createTempDirectory("cdc-delta").toString
-    val srcDir = s"$dir/changes"
+    val srcDir = s"$dir/wal"
     val tablePath = s"$dir/table"
     val ckpt = s"$dir/ckpt"
     Files.createDirectories(java.nio.file.Paths.get(srcDir))
+    val rowSchema = StructType(Seq(
+      StructField("id", LongType), StructField("v", StringType)))
 
-    Seq((1L, "a", 1L, "c"), (2L, "b", 2L, "c")).toDF("id", "v", "seq", "op")
-      .coalesce(1).write.mode("append").parquet(srcDir)
-    val q1 = StreamingMerge.startDelta(spark, srcDir, schema, tablePath,
-      ckpt, Seq("id"), "seq", hardDelete = true)
-    q1.processAllAvailable(); q1.stop()
+    def land(name: String, lines: Seq[String]): Unit =
+      Files.write(java.nio.file.Paths.get(s"$srcDir/$name"),
+        lines.mkString("", "\n", "\n").getBytes("UTF-8"))
+    def row(lsn: Long, action: String, id: Long, v: String): String =
+      s"""$lsn\t{"action":"$action","schema":"public","table":"t",""" +
+        s""""columns":[{"name":"id","type":"bigint","value":$id},""" +
+        s"""{"name":"v","type":"text","value":"$v"}]}"""
+    def drainDelta(): Unit = {
+      val q = StreamingMerge.startWalSlot(spark, srcDir, "public", "t",
+        rowSchema, tablePath, ckpt, Seq("id"), hardDelete = true,
+        flush = "delta")
+      q.processAllAvailable(); q.stop()
+    }
 
-    Seq((2L, "b2", 3L, "u"), (1L, "a", 4L, "d")).toDF("id", "v", "seq", "op")
-      .coalesce(1).write.mode("append").parquet(srcDir)
-    val q2 = StreamingMerge.startDelta(spark, srcDir, schema, tablePath,
-      ckpt, Seq("id"), "seq", hardDelete = true)
-    q2.processAllAvailable(); q2.stop()
+    land("w1.txt", Seq(row(1, "I", 1, "a"), row(2, "I", 2, "b")))
+    drainDelta()
+
+    land("w2.txt", Seq(row(3, "U", 2, "b2"),
+      "4\t" + """{"action":"D","schema":"public","table":"t","identity":[{"name":"id","type":"bigint","value":1}]}"""))
+    drainDelta()
 
     val out = graft.sink.DeltaMerge.readMerged(spark, tablePath, Seq("id"),
-      "seq", hardDelete = true).select("id", "v")
+      "_sdc_lsn", hardDelete = true).select("id", "v")
       .as[(Long, String)].collect()
     assert(out.toSeq == Seq((2L, "b2")))
   }

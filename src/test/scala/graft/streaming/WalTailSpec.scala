@@ -43,8 +43,7 @@ class WalTailSpec extends SparkSpecBase {
       spark.sessionState.newHadoopConf())
 
   /** Run the slot source to drain with AvailableNow, merging each
-    * micro-batch into `tablePath` — the startWal2Json flush shape,
-    * via the startWalSlot convenience.
+    * micro-batch into `tablePath` through startWalSlot.
     */
   private def drain(srcDir: String, tablePath: String, ckpt: String,
                     maxFilesPerTrigger: Option[Int] = None): Unit = {
@@ -150,6 +149,23 @@ class WalTailSpec extends SparkSpecBase {
         flush = "upsert")
     }
     assert(e.getMessage.contains("merge | delta"))
+  }
+
+  test("wal-tail slot: an unkeyed stream fails at start, before any " +
+      "batch is read or written") {
+    val dir = Files.createTempDirectory("waltail-nokey").toString
+    val srcDir = s"$dir/wal"
+    Files.createDirectories(java.nio.file.Paths.get(srcDir))
+    land(srcDir, "wal_0001.log", Seq(iu("I", 1, 1, "a"), del(2, 1)))
+    Seq("merge", "delta").foreach { flush =>
+      val e = intercept[IllegalArgumentException] {
+        StreamingMerge.startWalSlot(spark, srcDir, "public", "t",
+          rowSchema, s"$dir/table", s"$dir/ckpt_$flush", Seq.empty,
+          hardDelete = true, flush = flush)
+      }
+      assert(e.getMessage.contains("needs primary keys"))
+    }
+    assert(!Files.exists(java.nio.file.Paths.get(s"$dir/table")))
   }
 
   test("wal-tail slot: a restart WITHOUT its Spark checkpoint resumes " +
